@@ -51,6 +51,12 @@ object SparkEntry {
       concat(lit("msg "), col("event_id")).as("text"))
   }
 
+  /** A data dir as a path-name suffix: every per-dir scratch path (aux
+    * tables, landing copies, sinks, streaming checkpoints) is keyed by it,
+    * so concurrent runs at different scales never clobber each other. */
+  private def sanitized(dir: String): String =
+    dir.replaceAll("/+$", "").replaceAll("[^A-Za-z0-9.]", "_")
+
   /** Side-channel path where the (HOF-oracled) simhash signature stage is
     * persisted so DuckDB can independently recompute the banding +
     * bucket-cap + Hamming stages in SQL (the signature hash itself —
@@ -63,8 +69,7 @@ object SparkEntry {
   /** Where `q_ann_bucketed` materializes the cell-partitioned IVF layout
     * (scale path: write once, every probe prunes to nprobe directories). */
   def ivfTablePath(dir: String): String =
-    "/tmp/graft_oracle_aux/ivf_table_" +
-      dir.replaceAll("/+$", "").replaceAll("[^A-Za-z0-9.]", "_")
+    "/tmp/graft_oracle_aux/ivf_table_" + sanitized(dir)
 
   /** Side-channel for `q_embed_neardups`: the (HOF-oracled) hyperplane
     * bucket assignment, persisted so DuckDB recomputes the bucket-join +
@@ -79,8 +84,7 @@ object SparkEntry {
   def minhashLshTablePath(dir: String): String =
     // tmpfs: the probe opens one file per pruned (band, bhp) directory —
     // ~64 opens whose ~3ms disk fixed cost is the probe's floor
-    "/dev/shm/graft_oracle_aux/minhash_lsh_" +
-      dir.replaceAll("/+$", "").replaceAll("[^A-Za-z0-9.]", "_")
+    "/dev/shm/graft_oracle_aux/minhash_lsh_" + sanitized(dir)
 
   /** Side-channel for `q_dedup_clusters`: the verified near-dup PAIR set
     * (the output of the dedup pass — `q_minhash_neardups` measures
@@ -88,8 +92,7 @@ object SparkEntry {
     * connected-components operator over its real input shape, not a
     * recompute of the upstream pass. */
   def nearDupPairsPath(dir: String): String =
-    "/tmp/graft_oracle_aux/neardup_pairs_" +
-      dir.replaceAll("/+$", "").replaceAll("[^A-Za-z0-9.]", "_")
+    "/tmp/graft_oracle_aux/neardup_pairs_" + sanitized(dir)
 
   /** LSH-layout prefix fan-out for the sandbox scale factors. The layout
     * knob ([[graft.ops.Dedup.writeMinhashLshTable]]) is sized so each
@@ -168,8 +171,7 @@ object SparkEntry {
     * snapshot's files. Built at staging time — committing snapshots is
     * ingest work, not per-read work. */
   def snapshotLogPath(dir: String): String =
-    "/tmp/graft_oracle_aux/snaplog_" +
-      dir.replaceAll("/+$", "").replaceAll("[^A-Za-z0-9.]", "_")
+    "/tmp/graft_oracle_aux/snaplog_" + sanitized(dir)
 
   private def stageSnapshotLog(s: SparkSession, dir: String, force: Boolean): Unit = {
     val base = snapshotLogPath(dir)
@@ -213,8 +215,7 @@ object SparkEntry {
     // resumed stream fsync-writes offset/commit/state files per batch —
     // on /dev/vda those writes ride the machine's writeback storms (the
     // same reason newBenchSession puts spark.local.dir on /dev/shm)
-    "/dev/shm/graft_oracle_aux/sdedup_" +
-      dir.replaceAll("/+$", "").replaceAll("[^A-Za-z0-9.]", "_")
+    "/dev/shm/graft_oracle_aux/sdedup_" + sanitized(dir)
 
   private def copyTree(src: String, dst: String): Unit = {
     val sp = java.nio.file.Paths.get(src)
@@ -340,8 +341,7 @@ object SparkEntry {
     * path); payload bytes are built distributed at staging time, never in
     * a timed query body. */
   def mediaFixturesPath(dir: String): String =
-    "/tmp/graft_oracle_aux/media_fixtures_" +
-      dir.replaceAll("/+$", "").replaceAll("[^A-Za-z0-9.]", "_")
+    "/tmp/graft_oracle_aux/media_fixtures_" + sanitized(dir)
 
   private def stageMediaFixtures(s: SparkSession, dir: String, force: Boolean): Unit = {
     val path = mediaFixturesPath(dir)
@@ -454,17 +454,18 @@ object SparkEntry {
   private def stageStreamEvents(dir: String): String = {
     // tmpfs landing + idempotent copy: three streaming queries call this
     // per invocation, and an unconditional 2 MB disk copy per call sat
-    // inside every timed body (source file is immutable test data, so
-    // same-size = same-content here)
-    val landing = java.nio.file.Paths.get("/dev/shm/graft_oracle_aux/stream_events_" +
-      dir.replaceAll("/+$", "").replaceAll("[^A-Za-z0-9.]", "_"))
-    java.nio.file.Files.createDirectories(landing)
+    // inside every timed body. The copy carries the source's mtime, so it
+    // is skipped only when size AND mtime match: a regenerated
+    // events.parquet of the same size is copied again, not streamed stale.
+    import java.nio.file.{Files, StandardCopyOption}
+    val landing = java.nio.file.Paths.get("/dev/shm/graft_oracle_aux/stream_events_" + sanitized(dir))
+    Files.createDirectories(landing)
     val src = java.nio.file.Paths.get(s"$dir/events.parquet")
     val dst = landing.resolve("events.parquet")
-    if (!java.nio.file.Files.exists(dst) ||
-        java.nio.file.Files.size(dst) != java.nio.file.Files.size(src))
-      java.nio.file.Files.copy(src, dst,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    if (!Files.exists(dst) || Files.size(dst) != Files.size(src) ||
+        Files.getLastModifiedTime(dst).toMillis != Files.getLastModifiedTime(src).toMillis)
+      Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING,
+        StandardCopyOption.COPY_ATTRIBUTES)
     landing.toString
   }
 
@@ -474,8 +475,7 @@ object SparkEntry {
     * body and /dev/vda writeback storms would tax it (same rationale as
     * spark.local.dir). */
   private def sinkPath(dir: String): String =
-    "/dev/shm/graft_oracle_aux/violations_sink_" +
-      dir.replaceAll("/+$", "").replaceAll("[^A-Za-z0-9.]", "_")
+    "/dev/shm/graft_oracle_aux/violations_sink_" + sanitized(dir)
 
   /** Dynamic-JSON constraint query shape: validate a constructed JSON doc
     * per row through the native validator, explode, keep selected kinds. */
@@ -1843,7 +1843,9 @@ object SparkEntry {
       // explicit tmpfs checkpoint, reset per invocation (identical
       // reprocessing semantics to the default fresh temp checkpoint, but
       // the per-batch offset/commit/state writes hit /dev/shm, not /dev/vda)
-      val ckpt = "/dev/shm/graft-ckpt-verdicts"
+      // keyed by the sanitized dir: a fixed path let two concurrent runs
+      // delete each other's live checkpoint mid-stream
+      val ckpt = "/dev/shm/graft-ckpt-verdicts_" + sanitized(dir)
       rmTree(ckpt)
       val q = agg.writeStream.format("memory").queryName("graft_stream_verdicts")
         .outputMode("complete")
@@ -1870,7 +1872,7 @@ object SparkEntry {
       val agg = graft.streaming.StreamingValidator.sessionVerdicts(
         stream, spec, keyCol = "user_id", tsCol = "ts",
         watermark = "1 hour", gap = "12 hours")
-      val ckpt = "/dev/shm/graft-ckpt-sessions" // tmpfs, reset per run (see q_streaming_verdicts)
+      val ckpt = "/dev/shm/graft-ckpt-sessions_" + sanitized(dir) // see q_streaming_verdicts
       rmTree(ckpt)
       val q = agg.writeStream.format("memory").queryName("graft_stream_sessions")
         .outputMode("complete")
@@ -1901,7 +1903,7 @@ object SparkEntry {
           col("ts").cast("timestamp").as("ts"))
         .as[graft.streaming.StreamingValidator.TurnEvent]
       val anomalies = graft.streaming.StreamingValidator.conversationAnomalies(turns)
-      val ckpt = "/dev/shm/graft-ckpt-anomalies" // tmpfs, reset per run (see q_streaming_verdicts)
+      val ckpt = "/dev/shm/graft-ckpt-anomalies_" + sanitized(dir) // see q_streaming_verdicts
       rmTree(ckpt)
       val q = anomalies.toDF().writeStream.format("memory")
         .queryName("graft_stream_anomalies").outputMode("append")

@@ -414,11 +414,15 @@ object Compiler {
       case st: StructType =>
         // Closed object: key set is static — evaluate each field name as a
         // string value at plan time (the reference routes names through
-        // StdStringAdapter, validation_visitor.hpp:1213-1230).
+        // StdStringAdapter with a null results sink,
+        // validation_visitor.hpp:1213-1230): the name's own errors are
+        // suppressed and each failing present key gets one wrapper, as on
+        // the native path — so a `false` subschema, which has no error of
+        // its own, still reports.
         combine(st.fieldNames.toSeq.map { name =>
           val c = compile(s, lit(name), StringType, ptr, opts)
-          Compiled(value.isNull || !value.getField(name).isNotNull || c.pass,
-                   when(value.isNull || value.getField(name).isNull, emptyViols).otherwise(c.violations))
+          leaf(b(value.isNull || value.getField(name).isNull || c.pass), ptr,
+            lit("Failed to validate against 'propertyNames' constraint."), "propertyNames")
         })
       case MapType(_, _, _) =>
         val ok = value.isNull || forall(map_keys(value),

@@ -15,70 +15,26 @@ import graft.compile.{CompileOptions, Messages}
 import graft.spec._
 
 /** Whole-document dynamic validation in ONE pass: a custom Expression that
-  * takes a variant value and runs the entire compiled constraint tree over
-  * the variant binary in JVM code, returning `struct(pass, violations)`.
+  * takes a JSON string, parses it to a variant and runs the entire compiled
+  * constraint tree over the variant binary in JVM code, returning
+  * `struct(pass, violations)` (one parse + one walk per row; NULL input
+  * passes, malformed input fails with a parse violation).
   *
-  * Why it exists: the pure-Catalyst variant path re-reads the document at
-  * every constraint site (optimizer rules clone the parse/probe
-  * subexpressions across CASE branches where CSE cannot reach), costing
-  * O(constraints) document walks per row. This expression is the direct
-  * analog of the reference's `ValidationVisitor` tree walk
+  * Why it exists: the pure-Catalyst variant path
+  * (`Graft.validateJsonColumnCatalyst`) re-reads the document at every
+  * constraint site (optimizer rules clone the parse/probe subexpressions
+  * across CASE branches where CSE cannot reach), costing O(constraints)
+  * document walks per row. This expression is the direct analog of the
+  * reference's `ValidationVisitor` tree walk
   * (`validation_visitor.hpp:105-134`) — one walk, identical FIFO violation
   * order and byte-identical messages — vectorized row-by-row by Spark's
   * scan. The Catalyst formulation remains as the cross-checking oracle
   * (ConformanceSpec runs both paths over the full suite).
-  */
-case class ValidateVariantExpr(child: Expression, spec: SchemaSpec,
-                               strictDateTime: Boolean = false,
-                               strictTypes: Boolean = true,
-                               regexEngine: RegexEngine = JavaRegexEngine)
-    extends UnaryExpression {
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("pass", BooleanType, nullable = false),
-    StructField("violations", graft.compile.Compiler.violationArrayType)))
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == VariantType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"validate_variant requires a variant input, got ${child.dataType}")
-
-  @transient private lazy val validator =
-    new VariantValidator(spec, strictDateTime, strictTypes, regexEngine)
-
-  override def nullSafeEval(input: Any): Any =
-    validator.validateRow(input.asInstanceOf[VariantVal])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("graftValidator",
-      new VariantValidator(spec, strictDateTime, strictTypes, regexEngine),
-      classOf[VariantValidator].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $ref.validateRow($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): ValidateVariantExpr =
-    copy(child = newChild)
-}
-
-object ValidateVariantExpr {
-  /** Column API: `struct(pass, violations)` for a variant column. */
-  def validate(variant: Column, spec: SchemaSpec,
-               strictDateTime: Boolean = false,
-               strictTypes: Boolean = true,
-               regexEngine: RegexEngine = JavaRegexEngine): Column =
-    org.apache.spark.sql.GraftSqlBridge.column(
-      ValidateVariantExpr(org.apache.spark.sql.GraftSqlBridge.expression(variant),
-        spec, strictDateTime, strictTypes, regexEngine))
-}
-
-/** String-input form: parses the JSON inside the expression (one parse +
-  * one walk per row; NULL input passes, malformed input fails with a
-  * parse violation). Keeping parse + walk + malformed handling inside ONE
-  * deterministic expression makes downstream `getField` extractions
-  * ordinary top-level common subexpressions, which whole-stage codegen
-  * deduplicates — no document probe is ever cloned. */
+  *
+  * Keeping parse + walk + malformed handling inside ONE expression makes
+  * downstream `getField` extractions ordinary top-level common
+  * subexpressions, which whole-stage codegen deduplicates — no document
+  * probe is ever cloned. */
 case class ValidateJsonExpr(child: Expression, spec: SchemaSpec,
                             strictDateTime: Boolean = false,
                             strictTypes: Boolean = true,

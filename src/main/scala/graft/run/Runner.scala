@@ -3,7 +3,7 @@ package graft.run
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.compile.{CompileOptions, Compiler}
@@ -32,7 +32,7 @@ object Runner {
 
   /** The ONE derived-partition rule: when the table has no `partCol`,
     * bucket by a hash of the first key column. Shared by the row pass, the
-    * slim row output and TableRunner's stats path — three private copies
+    * slim row output and TableRunner's pinned projection — private copies
     * of this expression would let the buckets silently diverge between the
     * verdict and stats tables of the same run. */
   private[run] def withPartCol(df: DataFrame, partCol: String,
@@ -62,30 +62,35 @@ object Runner {
     // drifted once (verdictsOf gained violation_count, this one hadn't).
     // Catalyst collapses the projection and pushes the !pass conjunct to
     // the scan, so the fail-fast plan shape is unchanged (PlanSpec).
-    val rowOut = slimRowOutput(withPart, compiled, keyCols, partCol)
+    val rowOut = validatedRows(withPart, compiled, keyCols.map(col) :+ col(partCol))
     RowCheckOutput(flagged, violationsOf(rowOut, keyCols, partCol),
       verdictsOf(rowOut, partCol))
   }
 
   /** Single-scan row-level output: one slim projection
-    * `(keyCols…, partCol, pass, violations)` with the violation array
-    * evaluated ONLY for failing rows (CaseWhen short-circuit keeps passing
-    * rows at fail-fast cost). At scale this is THE row pass: write it once
-    * (it carries no payload columns), then derive both the violation table
-    * (explode) and per-partition verdicts (aggregate) from the written
-    * intermediate without ever re-scanning or re-validating the source. */
+    * `(keyCols…, partCol, pass, violations)` (see [[validatedRows]]). At
+    * scale this is THE row pass: write it once (it carries no payload
+    * columns), then derive both the violation table (explode) and
+    * per-partition verdicts (aggregate) from the written intermediate
+    * without ever re-scanning or re-validating the source. */
   def rowOutput(df: DataFrame, spec: SchemaSpec, keyCols: Seq[String],
                 partCol: String = "part_id",
                 opts: CompileOptions = CompileOptions()): DataFrame =
-    slimRowOutput(withPartCol(df, partCol, keyCols),
-      Compiler.compileRow(spec, df.schema, opts), keyCols, partCol)
+    validatedRows(withPartCol(df, partCol, keyCols),
+      Compiler.compileRow(spec, df.schema, opts), keyCols.map(col) :+ col(partCol))
 
-  private def slimRowOutput(withPart: DataFrame, compiled: graft.compile.Compiled,
-                            keyCols: Seq[String], partCol: String): DataFrame = {
+  /** THE row-output rule: the `carry` columns, then `pass` and the
+    * violation array, the array evaluated ONLY for failing rows (the
+    * CaseWhen short-circuit keeps passing rows at fail-fast cost).
+    * [[rowOutput]] and [[rowChecks]] carry the key and partition columns;
+    * TableRunner carries every column under private output names and pins
+    * the result, so its whole report derives from one scan. */
+  private[run] def validatedRows(withPart: DataFrame, compiled: graft.compile.Compiled,
+                                 carry: Seq[Column], passName: String = "pass",
+                                 violationsName: String = "violations"): DataFrame = {
     val empty = array().cast(Compiler.violationArrayType)
-    withPart.select(keyCols.map(col) :+ col(partCol) :+
-      compiled.pass.as("pass") :+
-      when(compiled.pass, empty).otherwise(compiled.violations).as("violations"): _*)
+    withPart.select(carry :+ compiled.pass.as(passName) :+
+      when(compiled.pass, empty).otherwise(compiled.violations).as(violationsName): _*)
   }
 
   /** Violation rows from a written/cached [[rowOutput]] frame.

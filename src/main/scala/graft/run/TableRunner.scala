@@ -4,15 +4,31 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.checks.{Drift, TableChecks}
+import graft.compile.Compiler
 import graft.spec.SchemaSpec
 
 /** Whole-table validation orchestration: one declarative config → one
   * report. This is the "switch from the reference" entry point for a table:
   * the row-level constraint pass (valijson semantics) plus every
-  * north-rule table check, each a separate lazily-planned DataFrame so
-  * callers pay only for what they materialize — EXCEPT drift verdicts,
-  * which collect O(buckets) sketches eagerly; all drift specs share one
-  * table scan (Drift.sketchMany).
+  * north-rule table check.
+  *
+  * ONE source scan per report. `run` compiles the row spec once and pins
+  * one projection of the input — every source column, the derived
+  * partition column, `pass`, and the violation array (filled only for
+  * failing rows, [[Runner.validatedRows]]) — with a lazy
+  * `localCheckpoint`. Every report output derives from the pinned frame,
+  * never from the source: the first action on any of them (or the eager
+  * drift sketch, when drift specs are configured) pays the one scan plus
+  * validation for the whole report, and later actions read the pinned
+  * blocks. The outputs themselves stay lazily planned, so callers still
+  * pay only the derivation of what they materialize.
+  *
+  * Release: the pin registers no `CacheManager` entry (a later run over
+  * the same path can never read stale blocks), and the `ContextCleaner`
+  * frees the blocks once the report's frames are garbage-collected.
+  * Lineage is truncated at the pin: an executor lost after the first
+  * action fails a later action on this report instead of recomputing its
+  * blocks — re-run `run` to recover.
   */
 object TableRunner {
 
@@ -73,29 +89,41 @@ object TableRunner {
   }
 
   def run(df: DataFrame, cfg: TableValidationConfig): TableValidationReport = {
-    val row = Runner.rowChecks(df, cfg.rowSpec, cfg.keyCols, cfg.partCol)
+    val withPart = Runner.withPartCol(df, cfg.partCol, cfg.keyCols)
+    // private names for the pinned validation columns, so a source column
+    // called `pass` or `violations` reaches the checks untouched
+    def fresh(base: String): String =
+      Iterator.iterate(base)(_ + "_").find(n => !withPart.columns.exists(_.equalsIgnoreCase(n))).get
+    val (passTmp, violTmp) = (fresh("__graft_pass"), fresh("__graft_violations"))
+    // compile against the schema AS GIVEN (see Runner.rowChecks); `*`
+    // carries every column without parsing its name
+    val pinned = Runner.validatedRows(withPart, Compiler.compileRow(cfg.rowSpec, df.schema),
+      Seq(col("*")), passTmp, violTmp).localCheckpoint(eager = false)
+    val sourceWithPart = pinned.drop(passTmp, violTmp)
+    val source = if (withPart eq df) sourceWithPart else sourceWithPart.drop(cfg.partCol)
+    // `pass` replaces a source column of that name in place, as withColumn
+    // on the source did
+    val flagged = pinned.withColumn("pass", col(passTmp)).drop(passTmp, violTmp)
+    val rowOut = pinned.select(cfg.keyCols.map(col) :+ col(cfg.partCol) :+
+      col(passTmp).as("pass") :+ col(violTmp).as("violations"): _*)
     val dups = keyed(cfg.uniqueness)(_.keys.mkString(",")).map { case (k, u) =>
-      k -> TableChecks.uniqueness(df, u.keys)
+      k -> TableChecks.uniqueness(source, u.keys)
     }.toMap
     val refs = keyed(cfg.referential)(_.column).map { case (k, r) =>
       k -> (r.vocab match {
-        case Left(values)        => TableChecks.referentialStatic(df, r.column, values)
-        case Right((vdf, vcol))  => TableChecks.referential(df, r.column, vdf, vcol)
+        case Left(values)        => TableChecks.referentialStatic(source, r.column, values)
+        case Right((vdf, vcol))  => TableChecks.referential(source, r.column, vdf, vcol)
       })
     }.toMap
-    // stats groupBy the partition column, which (like rowChecks) may need
-    // deriving — TableChecks.stats on the raw df crashed any statsCols
-    // config whose table lacked partCol, the case rowChecks supports.
-    // Runner.withPartCol is THE derivation rule, so stats buckets always
-    // align with the verdict table's.
+    // stats group by the partition column, which (like the row pass) may
+    // be derived — so they read the pinned frame WITH it, and stats buckets
+    // always align with the verdict table's
     val stats = if (cfg.statsCols.nonEmpty)
-      Some(TableChecks.stats(Runner.withPartCol(df, cfg.partCol, cfg.keyCols),
-        Seq(cfg.partCol), cfg.statsCols)) else None
+      Some(TableChecks.stats(sourceWithPart, Seq(cfg.partCol), cfg.statsCols)) else None
     // drift verdicts are the one EAGER element of the report (they collect
-    // O(buckets) sketches) — all K drift specs share ONE table scan
-    // instead of K (Drift.sketchMany), so adding a drift column does not
-    // add a scan
-    val driftSketches = Drift.sketchMany(df, cfg.drift.zipWithIndex.map {
+    // O(buckets) sketches) — all K drift specs share ONE aggregation
+    // (Drift.sketchMany), so adding a drift column does not add a job
+    val driftSketches = Drift.sketchMany(source, cfg.drift.zipWithIndex.map {
       case (d, i) =>
         // index-keyed: two specs may legally target the same column with
         // different baselines/expressions
@@ -105,7 +133,7 @@ object TableRunner {
     val drifts = cfg.drift.zipWithIndex.map { case (d, i) =>
       d.column -> Drift.verdictOf(driftSketches(i.toString), d.baseline, d.psiThreshold)
     }
-    TableValidationReport(row.flagged, row.violations, row.partitionVerdicts,
-      dups, refs, stats, drifts)
+    TableValidationReport(flagged, Runner.violationsOf(rowOut, cfg.keyCols, cfg.partCol),
+      Runner.verdictsOf(rowOut, cfg.partCol), dups, refs, stats, drifts)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row, functions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -22,6 +22,7 @@ import graft.spec.SpecParser
   * are skipped with a count assertion, like the reference's skip-lists
   * (test_validator.cpp:129-134). */
 class ConformanceSpec extends SparkTestBase {
+  import ConformanceSpec.Case
 
   private val mapper = new ObjectMapper()
 
@@ -31,16 +32,22 @@ class ConformanceSpec extends SparkTestBase {
   /** Dynamic path: the document as an arbitrary JSON value through the
     * VariantType compiler — no typing restrictions, nothing skipped. */
   private def runCaseVariant(schemaJson: JsonNode, data: JsonNode,
-                             ext: Map[String, String] = Map.empty): Boolean = {
+                             ext: Map[String, String] = Map.empty): (Boolean, Int) = {
     val spec = SpecParser.parseNode(schemaJson, ext)
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row(data.toString))),
       StructType(Seq(StructField("j", StringType))))
     val out = Graft.validateJsonColumnCatalyst(df, "j", spec)
-    out.select("pass").collect()(0).getBoolean(0)
+    val r = out.select(col("pass"), violationCount(col("violations"))).collect()(0)
+    (r.getBoolean(0), r.getInt(1))
   }
 
-  /** Native single-pass path: the ValidateVariantExpr document walk. */
+  /** Violations in an array column; a NULL array holds none. */
+  private def violationCount(v: Column): Column =
+    when(v.isNull, 0).otherwise(functions.size(v)) // Matchers shadows `size`
+
+  /** Native single-pass path: the ValidateJsonExpr parse + document walk
+    * (`Graft.validateJsonColumn`). */
   private def runCaseNative(schemaJson: JsonNode, data: JsonNode,
                             ext: Map[String, String] = Map.empty): (Boolean, Seq[(String, String)]) = {
     val spec = SpecParser.parseNode(schemaJson, ext)
@@ -53,20 +60,23 @@ class ConformanceSpec extends SparkTestBase {
   }
 
   private def runCase(schemaJson: JsonNode, data: JsonNode,
-                      ext: Map[String, String] = Map.empty): Option[Boolean] = {
+                      ext: Map[String, String] = Map.empty): Option[(Boolean, Int)] = {
     val spec = SpecParser.parseNode(schemaJson, ext)
-    infer(data).map {
+    // `pass` and `violations` are compiled as independent columns; both are
+    // read here so the invariant test below can hold them to each other
+    val r = infer(data).map {
       case (st: StructType, row: Row) =>
         val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(row)), st)
         val c = Compiler.compileRow(spec, st)
-        df.select(c.pass).collect()(0).getBoolean(0)
+        df.select(c.pass, violationCount(c.violations)).collect()(0)
       case (dt, v) =>
         val st = StructType(Seq(StructField("doc", dt)))
         val df = spark.createDataFrame(
           spark.sparkContext.parallelize(Seq(Row(v))), st)
         val c = Compiler.compile(spec, col("doc"), dt, lit(""))
-        df.select(coalesce(c.pass, lit(true))).collect()(0).getBoolean(0)
+        df.select(coalesce(c.pass, lit(true)), violationCount(c.violations)).collect()(0)
     }
+    r.map(x => (x.getBoolean(0), x.getInt(1)))
   }
 
   /** Optional per-group `externalDocs` map — the remote-$ref surface (the
@@ -76,35 +86,49 @@ class ConformanceSpec extends SparkTestBase {
     Option(g.get("externalDocs")).map(_.properties().asScala
       .map(e => e.getKey -> e.getValue.toString).toMap).getOrElse(Map.empty)
 
-  private def forEachCase(
-      f: (String, Map[String, String], JsonNode, JsonNode, Boolean) => Unit): Unit = {
+  private lazy val corpus: Seq[Case] = {
     val dir = new java.io.File(getClass.getResource("/conformance").toURI)
-    dir.listFiles().filter(_.getName.endsWith(".json")).sortBy(_.getName).foreach { file =>
-      mapper.readTree(file).elements().asScala.foreach { g =>
+    dir.listFiles().filter(_.getName.endsWith(".json")).sortBy(_.getName).toSeq.flatMap { file =>
+      mapper.readTree(file).elements().asScala.toSeq.flatMap { g =>
         val ext = extDocsOf(g)
-        g.get("tests").elements().asScala.foreach { t =>
-          f(s"${file.getName}: ${g.get("description").asText()} / ${t.get("description").asText()}",
-            ext, g.get("schema"), t.get("data"),
-            t.get("valid").asBoolean())
+        g.get("tests").elements().asScala.map { t =>
+          Case(s"${file.getName}: ${g.get("description").asText()} / ${t.get("description").asText()}",
+            ext, g.get("schema"), t.get("data"), t.get("valid").asBoolean())
         }
       }
     }
   }
 
+  // (pass, violation count) per case on each path, None where the path
+  // skips the case; computed once, read by the path tests and the
+  // pass ⇔ no-violations invariant test
+  private lazy val typedResults: Seq[(Case, Option[(Boolean, Int)])] = corpus.map { c =>
+    c -> (try runCase(c.schema, c.data, c.ext)
+      catch { case _: IllegalArgumentException => None }) // unsupported construct
+  }
+  // The variant Catalyst path compiles the schema to a FINITE expression
+  // tree, so cyclic $ref cannot inhabit it by design (Compiler.scala throws
+  // with a pointer to the native path, which runs every case). Those cases
+  // are the only permitted skips.
+  private lazy val variantResults: Seq[(Case, Option[(Boolean, Int)])] = corpus.map { c =>
+    c -> (try Some(runCaseVariant(c.schema, c.data, c.ext)) catch {
+      case e: IllegalArgumentException if e.getMessage.contains("cyclic $ref") => None
+    })
+  }
+  private lazy val nativeResults: Seq[(Case, Option[(Boolean, Int)])] = corpus.map { c =>
+    val (pass, viols) = runCaseNative(c.schema, c.data, c.ext)
+    c -> Some((pass, viols.size))
+  }
+
+  private def failuresOf(results: Seq[(Case, Option[(Boolean, Int)])]): Seq[String] =
+    results.collect { case (c, Some((got, _))) if got != c.valid =>
+      s"${c.label}: got $got want ${c.valid}" }
+
   test("conformance suite: typed-column path (JSON-Schema-Test-Suite format)") {
-    var total = 0; var passed = 0; var skipped = 0
-    val failures = scala.collection.mutable.ArrayBuffer[String]()
-    forEachCase { (label, ext, schema, data, want) =>
-      total += 1
-      try runCase(schema, data, ext) match {
-        case None => skipped += 1
-        case Some(got) =>
-          if (got == want) passed += 1
-          else failures += s"$label: got $got want $want"
-      } catch {
-        case _: IllegalArgumentException => skipped += 1 // unsupported construct
-      }
-    }
+    val total = typedResults.size
+    val skipped = typedResults.count(_._2.isEmpty)
+    val failures = failuresOf(typedResults)
+    val passed = total - skipped - failures.size
     info(s"typed conformance: $passed passed, $skipped skipped, ${failures.size} failed of $total")
     failures.foreach(f => info(s"  FAIL $f"))
     failures shouldBe empty
@@ -112,23 +136,10 @@ class ConformanceSpec extends SparkTestBase {
   }
 
   test("conformance suite: dynamic variant path (cyclic refs excepted)") {
-    // The variant Catalyst path compiles the schema to a FINITE expression
-    // tree, so cyclic $ref cannot inhabit it by design (Compiler.scala
-    // throws with a pointer to the native path, which runs every case).
-    // Those cases are the only permitted skips.
-    var total = 0; var passed = 0; var cyclicSkipped = 0
-    val failures = scala.collection.mutable.ArrayBuffer[String]()
-    forEachCase { (label, ext, schema, data, want) =>
-      total += 1
-      try {
-        val got = runCaseVariant(schema, data, ext)
-        if (got == want) passed += 1
-        else failures += s"$label: got $got want $want"
-      } catch {
-        case e: IllegalArgumentException if e.getMessage.contains("cyclic $ref") =>
-          cyclicSkipped += 1
-      }
-    }
+    val total = variantResults.size
+    val cyclicSkipped = variantResults.count(_._2.isEmpty)
+    val failures = failuresOf(variantResults)
+    val passed = total - cyclicSkipped - failures.size
     info(s"variant conformance: $passed passed, $cyclicSkipped cyclic-ref skipped, " +
       s"${failures.size} failed of $total")
     failures.foreach(f => info(s"  FAIL $f"))
@@ -141,18 +152,30 @@ class ConformanceSpec extends SparkTestBase {
   }
 
   test("conformance suite: native single-pass validator (no skips)") {
-    var total = 0; var passed = 0
-    val failures = scala.collection.mutable.ArrayBuffer[String]()
-    forEachCase { (label, ext, schema, data, want) =>
-      total += 1
-      val (got, _) = runCaseNative(schema, data, ext)
-      if (got == want) passed += 1
-      else failures += s"$label: got $got want $want"
-    }
+    val total = nativeResults.size
+    val failures = failuresOf(nativeResults)
+    val passed = total - failures.size
     info(s"native conformance: $passed passed, ${failures.size} failed of $total")
     failures.foreach(f => info(s"  FAIL $f"))
     failures shouldBe empty
     passed shouldBe total
+  }
+
+  test("pass ⇔ size(violations) = 0 on every conformance case, all three paths") {
+    // pass (fail-fast) and violations (accumulating) are built separately
+    // on every path; consumers that keep only one of them (a `!pass`
+    // filter dropped in favour of an explode, a verdict count of failing
+    // rows) rely on the two agreeing
+    val paths = Seq("typed" -> typedResults, "variant" -> variantResults,
+      "native" -> nativeResults)
+    val breaks = paths.flatMap { case (path, results) =>
+      results.collect { case (c, Some((pass, n))) if pass != (n == 0) =>
+        s"$path ${c.label}: pass=$pass with $n violations" }
+    }
+    paths.foreach { case (path, results) =>
+      info(s"$path: ${results.count(_._2.nonEmpty)} cases checked") }
+    breaks shouldBe empty
+    paths.foreach { case (_, results) => results.count(_._2.nonEmpty) should be > 80 }
   }
 
   test("native validator replicates the reference golden violation sequence") {
@@ -172,4 +195,10 @@ class ConformanceSpec extends SparkTestBase {
       ("",   "Failed to validate item #2 in array."),
       ("",   "Failed to validate against child schema #0."))
   }
+}
+
+object ConformanceSpec {
+  /** One conformance case: `valid` is the suite's expected verdict. */
+  final case class Case(label: String, ext: Map[String, String],
+                        schema: JsonNode, data: JsonNode, valid: Boolean)
 }
