@@ -39,20 +39,15 @@ object Graft {
                   builders: Map[String, SpecParser.ConstraintBuilder]): SchemaSpec =
     SpecParser.parse(json, externalDocs, builders)
 
-  final case class RowValidation(flagged: DataFrame, violations: DataFrame,
-                                 partitionVerdicts: DataFrame)
-
   /** Validate every row of `df` against `spec` (the analog of
     * `Validator::validate` per document, validator.hpp:71-85): fail-fast
     * `pass` flag on every row; exhaustive violation rows only for failures;
     * per-partition verdicts. */
   def validate(df: DataFrame, spec: SchemaSpec, keyCols: Seq[String],
-               opts: CompileOptions = CompileOptions()): RowValidation = {
-    val out = Runner.rowChecks(df, spec, keyCols, opts = opts)
-    RowValidation(out.flagged, out.violations, out.partitionVerdicts)
-  }
+               opts: CompileOptions = CompileOptions()): Runner.RowCheckOutput =
+    Runner.rowChecks(df, spec, keyCols, opts = opts)
 
-  def validate(df: DataFrame, schemaJson: String, keyCols: Seq[String]): RowValidation =
+  def validate(df: DataFrame, schemaJson: String, keyCols: Seq[String]): Runner.RowCheckOutput =
     validate(df, parseSchema(schemaJson), keyCols)
 
   /** Violation rows (keys + json_pointer + description [+ kind]) for a

@@ -425,9 +425,14 @@ object Compiler {
             lit("Failed to validate against 'propertyNames' constraint."), "propertyNames")
         })
       case MapType(_, _, _) =>
-        val ok = value.isNull || forall(map_keys(value),
-          k => compile(s, k, StringType, ptr, opts).pass)
-        leaf(b(ok), ptr, lit("Failed to validate against 'propertyNames' constraint."), "propertyNames")
+        // fail-fast pass; on failure one wrapper per failing key, as above
+        def keyOk(k: Column): Column = compile(s, k, StringType, ptr, opts).pass
+        val ok = b(value.isNull || forall(map_keys(value), keyOk))
+        val wrappers = transform(filter(map_keys(value), k => !b(keyOk(k))), _ =>
+          struct(ptr.as("json_pointer"),
+            lit("Failed to validate against 'propertyNames' constraint.").as("description"),
+            lit("propertyNames").as("kind")))
+        Compiled(ok, when(ok, emptyViols).otherwise(wrappers.cast(violationArrayType)))
       case _ => alwaysTrue
     }
 

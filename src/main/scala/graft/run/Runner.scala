@@ -3,7 +3,7 @@ package graft.run
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.compile.{CompileOptions, Compiler}
@@ -19,6 +19,11 @@ import graft.spec.SchemaSpec
   * failing slice. Both passes are shuffle-free; only the per-partition
   * verdict aggregation shuffles, and it shuffles O(partitions) rows.
   *
+  * ONE row-validation derivation: [[validated]] builds the validated frame
+  * and [[rowOutputs]] derives flagged rows, violation rows and verdicts
+  * from it — for [[rowChecks]] unpinned, for `TableRunner.run` pinned;
+  * `StreamingValidator.validateStream` exposes the frame's two columns.
+  *
   * Resumability (north rule): a driver-side manifest ledger records each
   * completed `part_id`; `resume` filters already-done partitions out of the
   * scan (partition-pruned when part_id is the storage partition column) —
@@ -30,15 +35,49 @@ object Runner {
   final case class RowCheckOutput(flagged: DataFrame, violations: DataFrame,
                                   partitionVerdicts: DataFrame)
 
-  /** The ONE derived-partition rule: when the table has no `partCol`,
-    * bucket by a hash of the first key column. Shared by the row pass, the
-    * slim row output and TableRunner's pinned projection — private copies
-    * of this expression would let the buckets silently diverge between the
-    * verdict and stats tables of the same run. */
-  private[run] def withPartCol(df: DataFrame, partCol: String,
-                               keyCols: Seq[String]): DataFrame =
-    if (df.columns.contains(partCol)) df
-    else df.withColumn(partCol, pmod(hash(col(keyCols.head)), lit(64)))
+  /** A validated frame and the private names of its `pass` and violation
+    * columns. */
+  private[graft] final case class Validated(frame: DataFrame, passCol: String, violationsCol: String)
+
+  /** THE row-validation rule: every column of `df` (carried by `*`, so no
+    * name is parsed); then `partCol` when given, derived by hashing the
+    * first key column if the table has none; then `pass` and the violation
+    * array, evaluated ONLY for failing rows (the CaseWhen short-circuit
+    * keeps passing rows at fail-fast cost). The validation columns get
+    * names no input column has. The spec compiles against the schema AS
+    * GIVEN: the partition column is bookkeeping, not a property of the
+    * document (it would trip additionalProperties/maxProperties/
+    * propertyNames on every row). */
+  private[graft] def validated(df: DataFrame, spec: SchemaSpec, keyCols: Seq[String],
+                               partCol: Option[String],
+                               opts: CompileOptions = CompileOptions()): Validated = {
+    val withPart = partCol.filterNot(df.columns.contains)
+      .fold(df)(df.withColumn(_, pmod(hash(col(keyCols.head)), lit(64))))
+    def fresh(base: String): String =
+      Iterator.iterate(base)(_ + "_").find(n => !withPart.columns.exists(_.equalsIgnoreCase(n))).get
+    val (passCol, violationsCol) = (fresh("__graft_pass"), fresh("__graft_violations"))
+    val compiled = Compiler.compileRow(spec, df.schema, opts)
+    Validated(withPart.select(col("*"), compiled.pass.as(passCol),
+      when(compiled.pass, array().cast(Compiler.violationArrayType))
+        .otherwise(compiled.violations).as(violationsCol)),
+      passCol, violationsCol)
+  }
+
+  /** The slim row output `(keyCols…, partCol, pass, violations)`. */
+  private def slim(v: Validated, keyCols: Seq[String], partCol: String): DataFrame =
+    v.frame.select(keyCols.map(col) :+ col(partCol) :+
+      col(v.passCol).as("pass") :+ col(v.violationsCol).as("violations"): _*)
+
+  /** THE derivation of the three row outputs: every row with `pass`
+    * (replacing a source column of that name in place, as `withColumn`
+    * does), the violation rows and the per-partition verdicts. Over an
+    * unpinned frame Catalyst collapses the projections and pushes the
+    * `!pass` conjunct to the scan (PlanSpec). */
+  private[graft] def rowOutputs(v: Validated, keyCols: Seq[String], partCol: String): RowCheckOutput = {
+    val rowOut = slim(v, keyCols, partCol)
+    RowCheckOutput(v.frame.withColumn("pass", col(v.passCol)).drop(v.passCol, v.violationsCol),
+      violationsOf(rowOut, keyCols, partCol), verdictsOf(rowOut, partCol))
+  }
 
   /** Row-level validation: adds `pass`, explodes violations for failing
     * rows, aggregates per-partition verdicts.
@@ -48,27 +87,11 @@ object Runner {
     */
   def rowChecks(df: DataFrame, spec: SchemaSpec, keyCols: Seq[String],
                 partCol: String = "part_id",
-                opts: CompileOptions = CompileOptions()): RowCheckOutput = {
-    val withPart = withPartCol(df, partCol, keyCols)
-    // Compile against the schema AS GIVEN (pre part_id injection): the
-    // bookkeeping column must not become a property of the validated
-    // document (it would trip additionalProperties/maxProperties/
-    // propertyNames specs on every row).
-    val compiled = Compiler.compileRow(spec, df.schema, opts)
-    val flagged = withPart.withColumn("pass", compiled.pass)
-    // violations and verdicts derive from the SAME slim projection the
-    // resumable runner uses ([[rowOutput]] → [[violationsOf]]/[[verdictsOf]])
-    // rather than a parallel inline pipeline — the two copies had already
-    // drifted once (verdictsOf gained violation_count, this one hadn't).
-    // Catalyst collapses the projection and pushes the !pass conjunct to
-    // the scan, so the fail-fast plan shape is unchanged (PlanSpec).
-    val rowOut = validatedRows(withPart, compiled, keyCols.map(col) :+ col(partCol))
-    RowCheckOutput(flagged, violationsOf(rowOut, keyCols, partCol),
-      verdictsOf(rowOut, partCol))
-  }
+                opts: CompileOptions = CompileOptions()): RowCheckOutput =
+    rowOutputs(validated(df, spec, keyCols, Some(partCol), opts), keyCols, partCol)
 
-  /** Single-scan row-level output: one slim projection
-    * `(keyCols…, partCol, pass, violations)` (see [[validatedRows]]). At
+  /** Single-scan row-level output: the slim projection
+    * `(keyCols…, partCol, pass, violations)` of the validated frame. At
     * scale this is THE row pass: write it once (it carries no payload
     * columns), then derive both the violation table (explode) and
     * per-partition verdicts (aggregate) from the written intermediate
@@ -76,22 +99,7 @@ object Runner {
   def rowOutput(df: DataFrame, spec: SchemaSpec, keyCols: Seq[String],
                 partCol: String = "part_id",
                 opts: CompileOptions = CompileOptions()): DataFrame =
-    validatedRows(withPartCol(df, partCol, keyCols),
-      Compiler.compileRow(spec, df.schema, opts), keyCols.map(col) :+ col(partCol))
-
-  /** THE row-output rule: the `carry` columns, then `pass` and the
-    * violation array, the array evaluated ONLY for failing rows (the
-    * CaseWhen short-circuit keeps passing rows at fail-fast cost).
-    * [[rowOutput]] and [[rowChecks]] carry the key and partition columns;
-    * TableRunner carries every column under private output names and pins
-    * the result, so its whole report derives from one scan. */
-  private[run] def validatedRows(withPart: DataFrame, compiled: graft.compile.Compiled,
-                                 carry: Seq[Column], passName: String = "pass",
-                                 violationsName: String = "violations"): DataFrame = {
-    val empty = array().cast(Compiler.violationArrayType)
-    withPart.select(carry :+ compiled.pass.as(passName) :+
-      when(compiled.pass, empty).otherwise(compiled.violations).as(violationsName): _*)
-  }
+    slim(validated(df, spec, keyCols, Some(partCol), opts), keyCols, partCol)
 
   /** Violation rows from a written/cached [[rowOutput]] frame.
     *
@@ -207,9 +215,15 @@ object Runner {
         .withColumn("attempt_id", lit(attemptId))
         .write.mode("append").partitionBy(partCol)
         .parquet(s"$outDir/violations")
-      val verdicts = verdictsOf(rowOut, partCol).cache()
+      // the O(partitions) verdict rows, collected once for the sink, the
+      // ledger, the metrics and the result — no `.cache()`, whose entry
+      // would outlive the call and answer a later run over a rewritten path
+      val computed = verdictsOf(rowOut, partCol)
+      val verdictRows = computed.collect()
+      val verdicts = spark.createDataFrame(verdictRows.toSeq.asJava, computed.schema)
       verdicts.withColumn("attempt_id", lit(attemptId))
         .write.mode("append").parquet(s"$outDir/verdicts")
+      // Spark's string form of the partition value, as `resume` compares
       val doneIds = verdicts.where(col(partCol).isNotNull)
         .select(col(partCol).cast("string")).collect().map(_.getString(0)).toSeq
       manifest.markDone(doneIds)
@@ -217,15 +231,12 @@ object Runner {
       // and metrics logged"); JSONL, one record per increment. Serialized
       // with Jackson: runId is caller-supplied free text and string
       // concatenation produced unparseable lines for ids with quotes.
-      val agg = verdicts.agg(sum("rows"), sum("fail_rows")).head()
-      val rows = if (agg.isNullAt(0)) 0L else agg.getLong(0)
-      val failRows = if (agg.isNullAt(1)) 0L else agg.getLong(1)
       val rec = new java.util.LinkedHashMap[String, Any]
       rec.put("run_id", runId)
       rec.put("attempt_id", attemptId)
       rec.put("partitions", doneIds.length)
-      rec.put("rows", rows)
-      rec.put("fail_rows", failRows)
+      rec.put("rows", verdictRows.map(_.getAs[Long]("rows")).sum)
+      rec.put("fail_rows", verdictRows.map(_.getAs[Long]("fail_rows")).sum)
       rec.put("wall_sec", (System.nanoTime() - t0) / 1e9)
       rec.put("part_ids", doneIds.sorted.toArray)
       val metrics =

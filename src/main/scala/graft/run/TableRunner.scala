@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.checks.{Drift, TableChecks}
-import graft.compile.Compiler
 import graft.spec.SchemaSpec
 
 /** Whole-table validation orchestration: one declarative config → one
@@ -12,15 +11,13 @@ import graft.spec.SchemaSpec
   * the row-level constraint pass (valijson semantics) plus every
   * north-rule table check.
   *
-  * ONE source scan per report. `run` compiles the row spec once and pins
-  * one projection of the input — every source column, the derived
-  * partition column, `pass`, and the violation array (filled only for
-  * failing rows, [[Runner.validatedRows]]) — with a lazy
-  * `localCheckpoint`. Every report output derives from the pinned frame,
-  * never from the source: the first action on any of them (or the eager
-  * drift sketch, when drift specs are configured) pays the one scan plus
-  * validation for the whole report, and later actions read the pinned
-  * blocks. The outputs themselves stay lazily planned, so callers still
+  * ONE source scan per report. `run` pins [[Runner.validated]]'s frame
+  * with a lazy `localCheckpoint` and derives the row outputs with
+  * [[Runner.rowOutputs]], as `Runner.rowChecks` does unpinned. Every
+  * report output derives from the pinned frame, never from the source:
+  * the first action on any of them (or the eager drift sketch, when drift
+  * specs are configured) pays the one scan plus validation for the whole
+  * report, and later actions read the pinned blocks. The outputs themselves stay lazily planned, so callers still
   * pay only the derivation of what they materialize.
   *
   * Release: the pin registers no `CacheManager` entry (a later run over
@@ -89,23 +86,14 @@ object TableRunner {
   }
 
   def run(df: DataFrame, cfg: TableValidationConfig): TableValidationReport = {
-    val withPart = Runner.withPartCol(df, cfg.partCol, cfg.keyCols)
-    // private names for the pinned validation columns, so a source column
-    // called `pass` or `violations` reaches the checks untouched
-    def fresh(base: String): String =
-      Iterator.iterate(base)(_ + "_").find(n => !withPart.columns.exists(_.equalsIgnoreCase(n))).get
-    val (passTmp, violTmp) = (fresh("__graft_pass"), fresh("__graft_violations"))
-    // compile against the schema AS GIVEN (see Runner.rowChecks); `*`
-    // carries every column without parsing its name
-    val pinned = Runner.validatedRows(withPart, Compiler.compileRow(cfg.rowSpec, df.schema),
-      Seq(col("*")), passTmp, violTmp).localCheckpoint(eager = false)
-    val sourceWithPart = pinned.drop(passTmp, violTmp)
-    val source = if (withPart eq df) sourceWithPart else sourceWithPart.drop(cfg.partCol)
-    // `pass` replaces a source column of that name in place, as withColumn
-    // on the source did
-    val flagged = pinned.withColumn("pass", col(passTmp)).drop(passTmp, violTmp)
-    val rowOut = pinned.select(cfg.keyCols.map(col) :+ col(cfg.partCol) :+
-      col(passTmp).as("pass") :+ col(violTmp).as("violations"): _*)
+    val v = Runner.validated(df, cfg.rowSpec, cfg.keyCols, Some(cfg.partCol))
+    val pinned = v.copy(frame = v.frame.localCheckpoint(eager = false))
+    val row = Runner.rowOutputs(pinned, cfg.keyCols, cfg.partCol)
+    // the checks see the source columns as given — a source column called
+    // `pass` or `violations` reaches them untouched
+    val sourceWithPart = pinned.frame.drop(v.passCol, v.violationsCol)
+    val source = if (df.columns.contains(cfg.partCol)) sourceWithPart
+      else sourceWithPart.drop(cfg.partCol)
     val dups = keyed(cfg.uniqueness)(_.keys.mkString(",")).map { case (k, u) =>
       k -> TableChecks.uniqueness(source, u.keys)
     }.toMap
@@ -133,7 +121,7 @@ object TableRunner {
     val drifts = cfg.drift.zipWithIndex.map { case (d, i) =>
       d.column -> Drift.verdictOf(driftSketches(i.toString), d.baseline, d.psiThreshold)
     }
-    TableValidationReport(flagged, Runner.violationsOf(rowOut, cfg.keyCols, cfg.partCol),
-      Runner.verdictsOf(rowOut, cfg.partCol), dups, refs, stats, drifts)
+    TableValidationReport(row.flagged, row.violations, row.partitionVerdicts,
+      dups, refs, stats, drifts)
   }
 }

@@ -69,12 +69,6 @@ object StreamingDedup {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
-        val dbg = sys.env.contains("GRAFT_SDEDUP_TIMING")
-        def tm[T](n: String)(f: => T): T =
-          if (!dbg) f else {
-            val t0 = System.nanoTime(); val r = f
-            System.err.println(f"[sdedup] $n ${(System.nanoTime() - t0) / 1e9}%.2fs"); r
-          }
         // normalize+minhash the batch ONCE: probe, intra-batch self-join
         // and the layout append all derive from this pinned (id, norm,
         // sig) frame — the dominant per-increment compute is not repeated.
@@ -106,9 +100,9 @@ object StreamingDedup {
             else spark.createDataFrame(
               spark.sparkContext.emptyRDD[Row],
               pairsSchema(batch.schema(idCol).dataType))
-          tm("pairs_write") { pairs.write.mode("append").parquet(pairsSink) }
-          tm("append") { Dedup.appendMinhashLshTableFromBase(base, lshTablePath,
-            numHashes, bands, prefixBuckets) }
+          pairs.write.mode("append").parquet(pairsSink)
+          Dedup.appendMinhashLshTableFromBase(base, lshTablePath,
+            numHashes, bands, prefixBuckets)
         } finally { base.unpersist(); () }
       }
       .start()

@@ -6,14 +6,14 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.compile.Compiler
+import graft.run.Runner
 import graft.spec.SchemaSpec
 
 /** Structured Streaming face of the engine (SURVEY.md §2.5 streaming row).
   *
   * The compiled constraint expressions are stateless projections, so the
-  * same `Compiled` plan validates a stream unchanged: `readStream` →
-  * withColumn(pass/violations) → sink. On top of that:
+  * same validated frame the batch runner builds validates a stream
+  * unchanged: `readStream` → pass/violations → sink. On top of that:
   *
   *  - windowed violation-rate aggregation with a watermark (late data
   *    bounded, state evicted),
@@ -23,13 +23,14 @@ import graft.spec.SchemaSpec
   */
 object StreamingValidator {
 
-  /** Stateless row validation on a streaming DataFrame — identical plan to
-    * the batch path (no shuffle, survives any trigger). */
+  /** Stateless row validation on a streaming DataFrame: the batch path's
+    * [[Runner.validated]] frame, no partition column, its columns exposed
+    * as `pass` and `violations` in place of any source columns of those
+    * names (no shuffle, survives any trigger). */
   def validateStream(stream: DataFrame, spec: SchemaSpec): DataFrame = {
-    val c = Compiler.compileRow(spec, stream.schema)
-    stream.withColumn("pass", c.pass)
-      .withColumn("violations", when(col("pass"), array().cast(Compiler.violationArrayType))
-        .otherwise(c.violations))
+    val v = Runner.validated(stream, spec, keyCols = Nil, partCol = None)
+    v.frame.withColumn("pass", col(v.passCol)).withColumn("violations", col(v.violationsCol))
+      .drop(v.passCol, v.violationsCol)
   }
 
   /** Windowed violation counts with a watermark: one row per event-time

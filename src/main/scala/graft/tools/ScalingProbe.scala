@@ -67,7 +67,6 @@ object ScalingProbe {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(
       Executors.newFixedThreadPool(8))
 
-    val mode = sys.env.getOrElse("GRAFT_PROBE_MODE", "full")
     val keys = Seq("conv_id", "turn_idx")
     val spec = Graft.parseSchema(TranscriptGen.transcriptSchemaJson)
     val rowOutPath = s"/dev/shm/graft-spark/rowout-$cores"
@@ -99,7 +98,7 @@ object ScalingProbe {
         Await.result(fViolations, Duration.Inf)
         Await.result(fVerdicts, Duration.Inf)
       }
-      val checks: Seq[Future[Any]] = if (mode == "full") Seq(
+      val checks: Seq[Future[Any]] = Seq(
         Future(step("uniqueness")(
           TableChecks.uniqueness(turns, Seq("conv_id", "turn_idx")).count())),
         Future(step("referential")(
@@ -108,15 +107,10 @@ object ScalingProbe {
           TableChecks.stats(turns, Seq("part_id"), Seq("role", "text", "turn_idx")).count())),
         Future(step("drift")(
           graft.checks.Drift.histogramDF(turns,
-            length(col("text")).cast("double"), 0, 400, 40).count()))
-      ) else Nil
+            length(col("text")).cast("double"), 0, 400, 40).count())))
       checks.foreach(Await.result(_, Duration.Inf))
       val rows = Await.result(rowDerived, Duration.Inf)
-      // containsKey guard: stepT.get on a ConcurrentHashMap[String, Double]
-      // unboxes the missing-key null to 0.0 BEFORE Option wraps it, so
-      // Option(...) alone would emit never-run steps as 0.000s
-      (rows, stepNames.filter(stepT.containsKey)
-        .map(n => n -> stepT.get(n).toDouble).toMap)
+      (rows, stepNames.map(n => n -> stepT.get(n).toDouble).toMap)
     }
 
     (1 to reps).foreach { i =>

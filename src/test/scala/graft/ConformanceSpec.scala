@@ -178,6 +178,22 @@ class ConformanceSpec extends SparkTestBase {
     paths.foreach { case (_, results) => results.count(_._2.nonEmpty) should be > 80 }
   }
 
+  test("propertyNames on a typed map column: one wrapper per failing key, as on the native path") {
+    // typed lifting makes objects structs, so the corpus never reaches the
+    // map branch; two of the three keys fail maxLength
+    val schema = mapper.readTree("""{"properties":{"m":{"propertyNames":{"maxLength":2}}}}""")
+    val data = mapper.readTree("""{"m":{"ab":0,"abc":1,"defg":2}}""")
+    val st = StructType(Seq(StructField("m", MapType(StringType, IntegerType))))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Row(Map("ab" -> 0, "abc" -> 1, "defg" -> 2)))), st)
+    val c = Compiler.compileRow(SpecParser.parseNode(schema), st)
+    val typed = df.select(c.pass, c.violations).collect()(0)
+    val (nativePass, nativeViols) = runCaseNative(schema, data)
+    typed.getBoolean(0) shouldBe nativePass
+    typed.getSeq[Row](1).map(x => (x.getString(0), x.getString(1))) shouldBe nativeViols
+    nativeViols.count(_._2.contains("'propertyNames'")) shouldBe 2
+  }
+
   test("native validator replicates the reference golden violation sequence") {
     val schema = mapper.readTree(
       """{"allOf": [

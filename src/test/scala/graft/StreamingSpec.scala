@@ -33,6 +33,28 @@ class StreamingSpec extends SparkTestBase {
     got shouldBe Map("user" -> true, "robot" -> false, "assistant" -> false)
   }
 
+  test("stream with its own pass/violations columns: both replaced in place, no duplicates") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(String, String, String, Int)]
+    val df = input.toDF().toDF("pass", "role", "text", "violations")
+    val out = StreamingValidator.validateStream(df, spec)
+    out.columns.toSeq shouldBe Seq("pass", "role", "text", "violations")
+    out.schema("pass").dataType shouldBe org.apache.spark.sql.types.BooleanType
+    out.schema("violations").dataType shouldBe graft.compile.Compiler.violationArrayType
+    val q = out.writeStream.format("memory").queryName("sv_named").outputMode("append").start()
+    input.addData(("src", "user", "hi", 7), ("src", "robot", "hello", 7))
+    q.processAllAvailable()
+    def byRole(df: org.apache.spark.sql.DataFrame) =
+      df.select("role", "pass", "violations").collect().map(r => r.getString(0) -> r).toMap
+    val got = byRole(spark.table("sv_named"))
+    q.stop()
+    // the same rows without the clashing columns validate identically
+    got shouldBe byRole(StreamingValidator.validateStream(
+      Seq(("user", "hi"), ("robot", "hello")).toDF("role", "text"), spec))
+    got("user").getBoolean(1) shouldBe true
+    got("robot").getBoolean(1) shouldBe false
+  }
+
   test("windowed verdicts with watermark aggregate failures per window") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, String, Timestamp)]

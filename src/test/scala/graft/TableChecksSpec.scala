@@ -271,6 +271,34 @@ class TableChecksSpec extends SparkTestBase {
     v2.count() shouldBe 0L
   }
 
+  test("resumable runner leaves no cache entry: a fresh run over a rewritten path reports the new rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-run-rewrite").toString
+    val path = s"$dir/turns.parquet"
+    val keys = Seq("conv_id", "turn_idx")
+    turns.where(col("part_id") < 4).write.parquet(path)
+    val firstRows = Runner.runResumable(spark, spark.read.parquet(path), spec, keys,
+      s"$dir/out", "w1").agg(sum("rows")).head().getLong(0)
+    // the verdicts of that run, derived again: no cached relation may
+    // answer for them once the call has returned
+    val derived = Runner.verdictsOf(Runner.rowOutput(spark.read.parquet(path), spec, keys))
+    derived.queryExecution.withCachedData.collect {
+      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation => m
+    } shouldBe empty
+
+    // rewritten by another writer (a Spark overwrite in the same SparkSession would
+    // itself refresh cache entries over the path): swap the files in place
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    def files(d: String) = Files.list(Paths.get(d)).iterator().asScala.toList
+    turns.write.parquet(s"$dir/next")
+    files(path).foreach(Files.delete)
+    files(s"$dir/next").foreach(f => Files.move(f, Paths.get(path, f.getFileName.toString)))
+    val second = Runner.runResumable(spark, spark.read.parquet(path), spec, keys,
+      s"$dir/out", "w2")
+    second.agg(sum("rows")).head().getLong(0) shouldBe turns.count()
+    turns.count() should be > firstRows
+  }
+
   test("sketchStats/mergeSketchStats: exact partials match; HLL estimate within tolerance") {
     val withPart = turns.withColumn("sk_part", pmod(hash(col("conv_id")), lit(16)))
     val sk = TableChecks.sketchStats(withPart, "sk_part", Seq("conv_id", "role"))
