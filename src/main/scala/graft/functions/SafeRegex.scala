@@ -18,6 +18,12 @@ trait RegexEngine extends Serializable {
     * pattern fails at PLAN time on the driver with a clear error, instead of
     * surfacing as a per-task exception on executors mid-job. */
   def compile(pattern: String): Unit = ()
+  /** The search for one pattern, compiled once: a caller that tests the
+    * same pattern many times holds this instead of calling [[search]],
+    * which looks the pattern up on every call. Same semantics as
+    * `search(pattern, _)`, and the same error if the pattern does not
+    * compile. */
+  def searcher(pattern: String): String => Boolean = input => search(pattern, input)
 }
 
 /** Default engine: JDK regex (full dialect, backtracking), with a
@@ -30,6 +36,10 @@ object JavaRegexEngine extends RegexEngine {
   override def compile(pattern: String): Unit = compiled(pattern)
   override def search(pattern: String, input: String): Boolean =
     compiled(pattern).matcher(input).find()
+  override def searcher(pattern: String): String => Boolean = {
+    val re = compiled(pattern)
+    input => re.matcher(input).find()
+  }
 }
 
 /** Thompson-NFA engine: O(|pattern| x |input|) worst case — immune to the
@@ -48,6 +58,7 @@ object ThompsonRegexEngine extends RegexEngine {
   override def compile(pattern: String): Unit = compiled(pattern)
   override def search(pattern: String, input: String): Boolean =
     compiled(pattern).search(input)
+  override def searcher(pattern: String): String => Boolean = compiled(pattern).search
 }
 
 final class ThompsonRegex(pattern: String) extends Serializable {

@@ -181,7 +181,29 @@ object SpecParser {
 
   def parseNode(root: JsonNode, externalDocs: Map[String, String],
                 builders: Map[String, ConstraintBuilder]): SchemaSpec =
-    new Parser(root, externalDocs, builders).rootSpec()
+    onParseStack(new Parser(root, externalDocs, builders).rootSpec())
+
+  /** Stack of the thread every parse runs on. The parser recurses a few
+    * frames per subschema level, across `$ref`'d documents too, and a
+    * caller's stack can run out before the 512-level guard fires (a
+    * 700-document `$ref` chain overflows a 512 KB or 768 KB stack); on a
+    * thread of its own with this much stack the guard always fires
+    * first. */
+  private val ParseStackBytes = 16L << 20
+
+  /** Run `body` on a thread of its own with [[ParseStackBytes]] of stack
+    * and hand its result or exception back; the caller waits, so the
+    * parser's state is only ever used by one thread at a time. */
+  private def onParseStack[T](body: => T): T = {
+    var result: Either[Throwable, T] = null
+    val t = new Thread(null, () => {
+      result = try Right(body) catch { case e: Throwable => Left(e) }
+    }, "graft-spec-parse", ParseStackBytes)
+    t.setDaemon(true)
+    t.start()
+    t.join()
+    result.fold(throw _, identity)
+  }
 
   /** Freeze a JSON constant (FrozenValue analog,
     * `internal/frozen_value.hpp:22-49`). */
@@ -660,7 +682,12 @@ object SpecParser {
       sub("pattern").foreach { p => cs += PatternC(p.asText()) }
       // properties / patternProperties / additionalProperties (SP:1086-1107)
       if (node.has("properties") || node.has("patternProperties") || node.has("additionalProperties")) {
-        val props = sub("properties").map(_.properties().asScala.map { e =>
+        // `.toVector` BEFORE mapping: `properties()` is a Set view, and
+        // mapping a Set builds a hash set of (name, subschema) tuples, in
+        // hash order — identity-hash order wherever a RefSchema is inside.
+        // PropertiesC keeps document order, so violation order is the same
+        // in every JVM
+        val props = sub("properties").map(_.properties().asScala.toVector.map { e =>
           // draft-3 self-required: `"required": true` INSIDE a property
           // subschema adds that property to the ENCLOSING object's required
           // set (makeRequiredConstraintForSelf, schema_parser.hpp:1120-1134,
@@ -672,10 +699,10 @@ object SpecParser {
           val selfReq = Option(e.getValue.get("required")).exists(r => r.isBoolean && r.asBoolean())
           if (selfReq) cs += RequiredC(Vector(e.getKey))
           e.getKey -> childDescend(e.getValue, s"$path/properties/${esc(e.getKey)}", selfReqOk = true)
-        }.toVector).getOrElse(Vector.empty)
-        val patProps = sub("patternProperties").map(_.properties().asScala.map { e =>
+        }).getOrElse(Vector.empty)
+        val patProps = sub("patternProperties").map(_.properties().asScala.toVector.map { e =>
           e.getKey -> childDescend(e.getValue, s"$path/patternProperties/${esc(e.getKey)}")
-        }.toVector).getOrElse(Vector.empty)
+        }).getOrElse(Vector.empty)
         val add: Option[SchemaSpec] = sub("additionalProperties") match {
           case Some(bn) if bn.isBoolean => if (bn.asBoolean()) Some(TrueSchema) else None
           case Some(on)                 => Some(childDescend(on, s"$path/additionalProperties"))

@@ -50,17 +50,25 @@ class ConformanceSpec extends SparkTestBase {
     * (`Graft.validateJsonColumn`). */
   private def runCaseNative(schemaJson: JsonNode, data: JsonNode,
                             ext: Map[String, String] = Map.empty): (Boolean, Seq[(String, String)]) = {
+    val (pass, viols) = runCaseNativeRows(schemaJson, data, ext)
+    (pass, viols.map(x => (x.getString(0), x.getString(1))))
+  }
+
+  /** `pass` and the violation rows `(json_pointer, description, kind)`. */
+  private def runCaseNativeRows(schemaJson: JsonNode, data: JsonNode,
+                                ext: Map[String, String]): (Boolean, Seq[Row]) = {
     val spec = SpecParser.parseNode(schemaJson, ext)
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row(data.toString))),
       StructType(Seq(StructField("j", StringType))))
     val out = Graft.validateJsonColumn(df, "j", spec)
     val r = out.select("pass", "violations").collect()(0)
-    (r.getBoolean(0), r.getSeq[Row](1).map(x => (x.getString(0), x.getString(1))))
+    (r.getBoolean(0), r.getSeq[Row](1))
   }
 
+  /** Typed path: `pass` and the `(json_pointer, kind)` of each violation. */
   private def runCase(schemaJson: JsonNode, data: JsonNode,
-                      ext: Map[String, String] = Map.empty): Option[(Boolean, Int)] = {
+                      ext: Map[String, String] = Map.empty): Option[(Boolean, Seq[(String, String)])] = {
     val spec = SpecParser.parseNode(schemaJson, ext)
     // `pass` and `violations` are compiled as independent columns; both are
     // read here so the invariant test below can hold them to each other
@@ -68,15 +76,17 @@ class ConformanceSpec extends SparkTestBase {
       case (st: StructType, row: Row) =>
         val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(row)), st)
         val c = Compiler.compileRow(spec, st)
-        df.select(c.pass, violationCount(c.violations)).collect()(0)
+        df.select(c.pass, c.violations).collect()(0)
       case (dt, v) =>
         val st = StructType(Seq(StructField("doc", dt)))
         val df = spark.createDataFrame(
           spark.sparkContext.parallelize(Seq(Row(v))), st)
         val c = Compiler.compile(spec, col("doc"), dt, lit(""))
-        df.select(coalesce(c.pass, lit(true)), violationCount(c.violations)).collect()(0)
+        df.select(coalesce(c.pass, lit(true)), c.violations).collect()(0)
     }
-    r.map(x => (x.getBoolean(0), x.getInt(1)))
+    // a NULL violations array holds none
+    r.map(x => (x.getBoolean(0), Option(x.getSeq[Row](1)).getOrElse(Nil)
+      .map(v => (v.getString(0), v.getString(2)))))
   }
 
   /** Optional per-group `externalDocs` map — the remote-$ref surface (the
@@ -101,11 +111,15 @@ class ConformanceSpec extends SparkTestBase {
 
   // (pass, violation count) per case on each path, None where the path
   // skips the case; computed once, read by the path tests and the
-  // pass ⇔ no-violations invariant test
-  private lazy val typedResults: Seq[(Case, Option[(Boolean, Int)])] = corpus.map { c =>
-    c -> (try runCase(c.schema, c.data, c.ext)
-      catch { case _: IllegalArgumentException => None }) // unsupported construct
-  }
+  // pass ⇔ no-violations invariant test. The typed and native paths also
+  // keep each violation's (json_pointer, kind) for the violation-level test.
+  private lazy val typedViolations: Seq[(Case, Option[(Boolean, Seq[(String, String)])])] =
+    corpus.map { c =>
+      c -> (try runCase(c.schema, c.data, c.ext)
+        catch { case _: IllegalArgumentException => None }) // unsupported construct
+    }
+  private lazy val typedResults: Seq[(Case, Option[(Boolean, Int)])] =
+    typedViolations.map { case (c, r) => c -> r.map { case (pass, vs) => (pass, vs.size) } }
   // The variant Catalyst path compiles the schema to a FINITE expression
   // tree, so cyclic $ref cannot inhabit it by design (Compiler.scala throws
   // with a pointer to the native path, which runs every case). Those cases
@@ -115,10 +129,13 @@ class ConformanceSpec extends SparkTestBase {
       case e: IllegalArgumentException if e.getMessage.contains("cyclic $ref") => None
     })
   }
-  private lazy val nativeResults: Seq[(Case, Option[(Boolean, Int)])] = corpus.map { c =>
-    val (pass, viols) = runCaseNative(c.schema, c.data, c.ext)
-    c -> Some((pass, viols.size))
-  }
+  private lazy val nativeViolations: Seq[(Case, (Boolean, Seq[(String, String)]))] =
+    corpus.map { c =>
+      val (pass, viols) = runCaseNativeRows(c.schema, c.data, c.ext)
+      c -> ((pass, viols.map(v => (v.getString(0), v.getString(2)))))
+    }
+  private lazy val nativeResults: Seq[(Case, Option[(Boolean, Int)])] =
+    nativeViolations.map { case (c, (pass, vs)) => c -> Some((pass, vs.size)) }
 
   private def failuresOf(results: Seq[(Case, Option[(Boolean, Int)])]): Seq[String] =
     results.collect { case (c, Some((got, _))) if got != c.valid =>
@@ -176,6 +193,20 @@ class ConformanceSpec extends SparkTestBase {
       info(s"$path: ${results.count(_._2.nonEmpty)} cases checked") }
     breaks shouldBe empty
     paths.foreach { case (_, results) => results.count(_._2.nonEmpty) should be > 80 }
+  }
+
+  test("native walk and typed path report equal (json_pointer, kind) multisets on every comparable case") {
+    // `pass` agreement (the path tests above) does not see a path that
+    // reports one violation too many or too few, or at the wrong pointer
+    val diffs = typedViolations.zip(nativeViolations).collect {
+      case ((c, Some((_, typed))), (_, (_, native))) if typed.sorted != native.sorted =>
+        s"${c.label}: typed ${typed.sorted} native ${native.sorted}"
+    }
+    val compared = typedViolations.count(_._2.nonEmpty)
+    info(s"typed vs native: ${diffs.size} of $compared comparable cases differ")
+    diffs.foreach(d => info(s"  DIFF $d"))
+    diffs shouldBe empty
+    compared should be > 1000
   }
 
   test("propertyNames on a typed map column: one wrapper per failing key, as on the native path") {

@@ -211,15 +211,34 @@ class RefSpec extends SparkTestBase {
     // the band Jackson cannot see: unbounded nesting assembled from a CHAIN
     // of shallow external documents — the parser's own 512-level guard
     // rejects it instead of recursing to a StackOverflowError
-    val n = 700
-    val ext = (0 until n).map { i =>
+    val e = intercept[IllegalArgumentException](
+      SpecParser.parse("""{"$ref": "http://deep.test/s0.json"}""", deepRefChain(700)))
+    e.getMessage should include("nesting exceeds the parser limit")
+  }
+
+  test("the $ref-chain nesting guard fires whatever the caller's stack (512 KB thread)") {
+    // the parse must not depend on the caller's stack headroom: on a thread
+    // this small the recursive descent overflowed before the 512-level
+    // guard could fire
+    var outcome: Throwable = null
+    val t = new Thread(null, () => {
+      outcome =
+        try { SpecParser.parse("""{"$ref": "http://deep.test/s0.json"}""", deepRefChain(700)); null }
+        catch { case e: Throwable => e }
+    }, "small-stack-parse", 512L * 1024)
+    t.start()
+    t.join()
+    outcome shouldBe an[IllegalArgumentException]
+    outcome.getMessage should include("nesting exceeds the parser limit")
+  }
+
+  /** `n` shallow external documents, each `$ref`-ing the next from inside a
+    * property: nesting Jackson cannot see, assembled across documents. */
+  private def deepRefChain(n: Int): Map[String, String] =
+    (0 until n).map { i =>
       s"http://deep.test/s$i.json" ->
         s"""{"properties":{"p":{"$$ref":"http://deep.test/s${i + 1}.json"}}}"""
     }.toMap + (s"http://deep.test/s$n.json" -> """{"type":"integer"}""")
-    val e = intercept[IllegalArgumentException](
-      SpecParser.parse("""{"$ref": "http://deep.test/s0.json"}""", ext))
-    e.getMessage should include("nesting exceeds the parser limit")
-  }
 
   test("pointer token decoding error paths mirror the reference's strict resolver") {
     // "%4z": strtoul consumed one hex digit then hit garbage — the ONLY
