@@ -135,9 +135,22 @@ object Graft {
     * One codegen'd projection: the CaseWhen dispatch evaluates only the
     * matching branch per row, so every row pays exactly ONE parse + ONE
     * document walk no matter how many schemas are registered — never
-    * per-schema scans, a join, or a shuffle. Scale-wise this is the same
-    * single-scan shape as [[validateJsonColumn]]; the schema registry
-    * rides the plan as compiled constants (broadcast with the closure).
+    * per-schema scans, a join, or a shuffle. The schema registry rides the
+    * plan as compiled constants (broadcast with the closure).
+    *
+    * The result is pinned with a lazy `localCheckpoint`, as
+    * [[graft.run.TableRunner.run]] pins its row pass: the first action on
+    * the returned frame pays for the one scan, parse and walk, and every
+    * later action (a pass count after a violation write, say) reads the
+    * pinned blocks instead of walking every document again. The pin makes
+    * no `CacheManager` entry; its blocks are freed by the `ContextCleaner`
+    * once the frame is unreachable. Lineage is truncated at the pin, so an
+    * executor lost after the first action fails later actions on the
+    * frame. With adaptive execution the validation plan is planned here,
+    * so a shuffle below it (a repartition of `df`) runs at call time. The
+    * pin stores every column of `df`: select the columns the actions need
+    * before the call. [[validateJsonColumn]] is not pinned, nor is a
+    * streaming `df`.
     *
     * Keys absent from the registry (including NULL keys) follow
     * `default`: `Some(spec)` validates against it, `None` passes —
@@ -159,9 +172,11 @@ object Graft {
     val dispatched = specs.toSeq.sortBy(_._1).foldRight(fallback) {
       case ((k, spec), other) => when(col(keyCol) === k, res(spec)).otherwise(other)
     }
-    df.withColumn("__graft_res", dispatched)
+    val out = df.withColumn("__graft_res", dispatched)
       .withColumn("pass", col("__graft_res.pass"))
       .withColumn("violations", col("__graft_res.violations"))
       .drop("__graft_res")
+    // a stream cannot be checkpointed; each micro-batch is planned afresh
+    if (out.isStreaming) out else out.localCheckpoint(eager = false)
   }
 }

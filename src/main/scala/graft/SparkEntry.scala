@@ -2047,10 +2047,13 @@ object SparkEntry {
         "error" -> Graft.parseSchema("""{"properties":{"k":{"exclusiveMaximum":80}}}"""))
       // resplit: one-row-group input, the walk is the cost. NO !pass
       // filter: exploding an empty violations array already emits zero
-      // rows for passing documents, and the filter's pass-probe would be a
-      // SECOND evaluation of the whole dispatch per row (the duplication
-      // q_json_validate's comment warns about — same result, double walk).
-      Graft.validateJsonColumnBy(resplit(t(dir, "events")), "props", "event_type", specs)
+      // rows for passing documents. The select keeps the dispatcher's pin
+      // to the three columns read here (the pin cannot prune columns);
+      // with adaptive execution the pin plans at call time, so the resplit
+      // shuffle runs when the query is built, not at its action.
+      Graft.validateJsonColumnBy(
+          resplit(t(dir, "events")).select("event_id", "event_type", "props"),
+          "props", "event_type", specs)
         .select(col("event_id"), col("event_type"), explode(col("violations")).as("v"))
         .where(col("v.kind") =!= "properties") // wrapper rows: kind-pinned leaves suffice
         .select(col("event_id"), col("event_type"),

@@ -36,9 +36,13 @@ object JavaRegexEngine extends RegexEngine {
   override def compile(pattern: String): Unit = compiled(pattern)
   override def search(pattern: String, input: String): Boolean =
     compiled(pattern).matcher(input).find()
+  /** Reuses one `Matcher` per thread, reset for each input, instead of
+    * allocating one per test; a `Matcher` is mutable, so it is never shared
+    * between threads. */
   override def searcher(pattern: String): String => Boolean = {
     val re = compiled(pattern)
-    input => re.matcher(input).find()
+    val matcher = ThreadLocal.withInitial[java.util.regex.Matcher](() => re.matcher(""))
+    input => matcher.get.reset(input).find()
   }
 }
 

@@ -2,6 +2,7 @@ package graft.functions
 
 import scala.collection.mutable
 
+import com.fasterxml.jackson.core.JsonFactory
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
@@ -18,7 +19,8 @@ import graft.spec._
   * takes a JSON string, parses it to a variant and runs the entire compiled
   * constraint tree over the variant binary in JVM code, returning
   * `struct(pass, violations)` (one parse + one walk per row; NULL input
-  * passes, malformed input fails with a parse violation).
+  * passes, malformed input, or text after the document's JSON value, fails
+  * with a parse violation).
   *
   * Why it exists: the pure-Catalyst variant path
   * (`Graft.validateJsonColumnCatalyst`) re-reads the document at every
@@ -1282,15 +1284,34 @@ object VariantValidator {
         UTF8String.fromString("Failed to parse JSON document."),
         UTF8String.fromString("parse")))))))
 
-  /** NULL input passes (absent document); malformed or over-size input
-    * fails with a parse violation; otherwise one walk. */
+  /** NULL input passes (absent document); malformed or over-size input,
+    * and input with anything but whitespace after its JSON value, fails
+    * with a parse violation; otherwise one walk. */
   def validateJsonString(validator: VariantValidator, s: UTF8String): InternalRow = {
     if (s == null) return passRow
     val doc =
-      try VariantBuilder.parseJson(s.toString, false)
+      try parseJsonText(s)
       catch { case scala.util.control.NonFatal(_) => null } // fatal errors (OOM, task kill) propagate
     if (doc == null) parseFailRow
     else validator.validate(doc.getValue, doc.getMetadata)
+  }
+
+  /** One JSON text (RFC 8259) as a variant, parsed straight from the
+    * string's UTF-8 bytes (no UTF-16 copy of the document), or null when
+    * something other than whitespace follows the value. Jackson's default
+    * factory and limits, as `VariantBuilder.parseJson(String, Boolean)`
+    * uses, which reads the first value and ignores the rest. */
+  private def parseJsonText(s: UTF8String): Variant = {
+    val p = s.getBaseObject match {
+      case a: Array[Byte] => new JsonFactory().createParser(a,
+        (s.getBaseOffset - org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes)
+      case _ => new JsonFactory().createParser(s.getBytes)
+    }
+    try {
+      p.nextToken()
+      val v = VariantBuilder.parseJson(p, false)
+      if (p.nextToken() == null) v else null
+    } finally p.close()
   }
 
   def assertSupported(s: SchemaSpec): Unit = {

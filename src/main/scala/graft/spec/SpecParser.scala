@@ -187,23 +187,36 @@ object SpecParser {
     * frames per subschema level, across `$ref`'d documents too, and a
     * caller's stack can run out before the 512-level guard fires (a
     * 700-document `$ref` chain overflows a 512 KB or 768 KB stack); on a
-    * thread of its own with this much stack the guard always fires
-    * first. */
+    * thread with this much stack the guard always fires first. */
   private val ParseStackBytes = 16L << 20
 
-  /** Run `body` on a thread of its own with [[ParseStackBytes]] of stack
-    * and hand its result or exception back; the caller waits, so the
-    * parser's state is only ever used by one thread at a time. */
-  private def onParseStack[T](body: => T): T = {
-    var result: Either[Throwable, T] = null
-    val t = new Thread(null, () => {
-      result = try Right(body) catch { case e: Throwable => Left(e) }
-    }, "graft-spec-parse", ParseStackBytes)
+  /** The one long-lived daemon thread, with [[ParseStackBytes]] of stack,
+    * that every parse runs on; started on the first parse. Parses from
+    * several callers queue, so the parser's state is only ever used by one
+    * thread at a time. */
+  @volatile private var parseThreadRef: Thread = null
+  private lazy val parseThread = java.util.concurrent.Executors.newSingleThreadExecutor { r =>
+    val t = new Thread(null, r, "graft-spec-parse", ParseStackBytes)
     t.setDaemon(true)
-    t.start()
-    t.join()
-    result.fold(throw _, identity)
+    parseThreadRef = t
+    t
   }
+
+  /** Run `body` on the parse thread and hand its result or exception back;
+    * the caller waits. A parse already on that thread (a custom-keyword
+    * builder that parses a schema) runs inline, so it cannot wait on
+    * itself. The body runs with the caller's context class loader. */
+  private def onParseStack[T](body: => T): T =
+    if (Thread.currentThread eq parseThreadRef) body
+    else {
+      val loader = Thread.currentThread.getContextClassLoader
+      val task: java.util.concurrent.Callable[T] = () => {
+        Thread.currentThread.setContextClassLoader(loader)
+        body
+      }
+      try parseThread.submit(task).get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    }
 
   /** Freeze a JSON constant (FrozenValue analog,
     * `internal/frozen_value.hpp:22-49`). */

@@ -305,7 +305,7 @@ class JsonColumnSpec extends SparkTestBase {
       "hi" -> Graft.parseSchema("""{"properties":{"k":{"minimum":20}}}"""))
     def passMap(out: org.apache.spark.sql.DataFrame) =
       out.select("id", "pass").collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    val noDefault = Graft.validateJsonColumnBy(df, "args", "tool", specs)
+    val (noDefault, validationPlan) = pinPlan(Graft.validateJsonColumnBy(df, "args", "tool", specs))
     passMap(noDefault) shouldBe Map(1L -> true, 2L -> false, 3L -> true,
       4L -> false, 5L -> true, 6L -> true)
     // the failing row carries the DISPATCHED schema's exact violation
@@ -316,9 +316,82 @@ class JsonColumnSpec extends SparkTestBase {
       default = Some(Graft.parseSchema("""{"properties":{"k":{"minimum":0}}}""")))
     passMap(withDefault) shouldBe Map(1L -> true, 2L -> false, 3L -> true,
       4L -> false, 5L -> false, 6L -> false)
-    // single projection: no join/exchange anywhere in the plan
-    val plan = noDefault.queryExecution.executedPlan.toString
-    plan should not include "Exchange"
-    plan should not include "Join"
+    // single projection: no join/exchange anywhere in the validation plan
+    // (the plan the pin runs; the frame's own plan is a scan of the pin)
+    validationPlan should include("validatejsonexpr")
+    validationPlan should not include "Exchange"
+    validationPlan should not include "Join"
+    // the same rows and violations as the unpinned per-key formulation
+    def rows(out: org.apache.spark.sql.DataFrame) =
+      out.select("id", "pass", "violations").collect().map(r => r.getLong(0) -> r).toMap
+    rows(noDefault) shouldBe rows(unpinnedBy(df, specs, None))
+    val dflt = Graft.parseSchema("""{"properties":{"k":{"minimum":0}}}""")
+    rows(withDefault) shouldBe rows(unpinnedBy(df, specs, Some(dflt)))
+  }
+
+  test("validateJsonColumnBy: two actions on one result walk each document once") {
+    val walks = spark.sparkContext.longAccumulator("walks")
+    // a custom keyword at each schema's root runs once per document walk
+    def counted(s: String) = {
+      val c = Graft.parseSchema(s).asInstanceOf[graft.spec.ConstraintSchema]
+      c.copy(constraints = graft.spec.CustomC("walked", _ => lit(true), "never fails",
+        nativePredicate = Some { (_: org.apache.spark.types.variant.Variant) =>
+          walks.add(1); true }) +: c.constraints)
+    }
+    val specs = Map(
+      "lo" -> counted("""{"properties":{"k":{"maximum":10}}}"""),
+      "hi" -> counted("""{"properties":{"k":{"minimum":20}}}"""))
+    val docs = (0 until 200).map(i => (i.toLong, if (i % 2 == 0) "lo" else "hi", s"""{"k": ${i % 40}}"""))
+    val df = spark.createDataFrame(docs).toDF("id", "tool", "args").repartition(4)
+    val flagged = Graft.validateJsonColumnBy(df, "args", "tool", specs)
+    val passes = flagged.where(col("pass")).count()
+    walks.value shouldBe 200L
+    val violations = flagged.where(!col("pass"))
+      .select(col("id"), explode(col("violations")).as("v")).select("id", "v.kind")
+    val viol = violations.collect()
+    walks.value shouldBe 200L // the second action read the pin
+    violations.queryExecution.executedPlan.toString should not include "validatejsonexpr"
+    // lo fails k > 10, hi fails k < 20
+    val want = docs.count { case (_, t, a) =>
+      val k = a.drop(6).dropRight(1).toInt
+      if (t == "lo") k <= 10 else k >= 20 }
+    passes shouldBe want.toLong
+    viol.count(_.getString(1) == "maximum") + viol.count(_.getString(1) == "minimum") shouldBe 200 - want
+  }
+
+  /** Runs `pinned`'s first action, returning it with the executed plan of
+    * the `localCheckpoint` it came from. */
+  private def pinPlan(pinned: => org.apache.spark.sql.DataFrame): (org.apache.spark.sql.DataFrame, String) = {
+    @volatile var plan: String = null
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") plan = qe.executedPlan.toString
+      def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = pinned
+      // listener events arrive on the listener bus, after the call
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (plan == null && System.nanoTime() < deadline) Thread.sleep(10)
+      plan should not be null
+      (out, plan)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** The dispatch without the pin: each key's rows through
+    * `validateJsonColumn` against its own schema, the rest against the
+    * default or passing. */
+  private def unpinnedBy(df: org.apache.spark.sql.DataFrame, specs: Map[String, graft.spec.SchemaSpec],
+                         default: Option[graft.spec.SchemaSpec]): org.apache.spark.sql.DataFrame = {
+    val keyed = specs.toSeq.map { case (k, s) =>
+      Graft.validateJsonColumn(df.where(col("tool") === k), "args", s) }
+    val rest = df.where(col("tool").isNull || !col("tool").isin(specs.keys.toSeq: _*))
+    val others = default.map(Graft.validateJsonColumn(rest, "args", _)).getOrElse(
+      rest.withColumn("pass", lit(true))
+        .withColumn("violations", array().cast(graft.compile.Compiler.violationArrayType)))
+    (keyed :+ others).reduce(_ unionByName _)
   }
 }

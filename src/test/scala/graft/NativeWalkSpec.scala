@@ -306,14 +306,13 @@ class NativeWalkSpec extends SparkTestBase {
         ("", "Missing required property 'a'.", "required"))))
   }
 
-  test("KNOWN DEFECT: text after the first JSON value is ignored (CHANGES.md FOUND, trailing text)") {
-    // Neither document is a JSON text (RFC 8259); both should fail to
-    // parse. This pins the behaviour as it stands so the walk's rewrite
-    // cannot change it unnoticed; the fix flips both to parse violations.
-    walk("""{"type": "object", "required": ["a"]}""", "1 2", """{"a": 1} x""") shouldBe Seq(
-      (false, Seq(
-        ("", "Value type not permitted by 'type' constraint.", "type"))),
-      (true, Seq()))
+  test("text after the first JSON value fails to parse; trailing whitespace does not") {
+    // a document is one JSON text (RFC 8259): a second value or stray
+    // characters after the first make it malformed
+    val parseFail = (false, Seq(("", "Failed to parse JSON document.", "parse")))
+    walk("""{"type": "object", "required": ["a"]}""",
+        "1 2", """{"a": 1} x""", """{"a": 1}}""", """{"a": 1} {"a": 2}""", "{\"a\": 1} \n\t ") shouldBe Seq(
+      parseFail, parseFail, parseFail, parseFail, (true, Seq()))
   }
 
   test("weak typing: an empty array stands in for an object with no fields") {

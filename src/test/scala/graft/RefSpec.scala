@@ -232,6 +232,25 @@ class RefSpec extends SparkTestBase {
     outcome.getMessage should include("nesting exceeds the parser limit")
   }
 
+  test("a custom-keyword builder that parses a schema itself runs inline on the parse thread") {
+    // every parse runs on one long-lived thread; a parse started on that
+    // thread must not queue behind the parse that started it
+    var builderThread: String = null
+    val builders = Map[String, SpecParser.ConstraintBuilder]("sub" -> { n =>
+      builderThread = Thread.currentThread.getName
+      val inner = SpecParser.parse(n.toString)
+      graft.spec.CustomC("sub", _ => lit(true), "value fails its 'sub' schema",
+        nativePredicate = Some { v: org.apache.spark.types.variant.Variant =>
+          v.getType == org.apache.spark.types.variant.VariantUtil.Type.STRING && inner != null })
+    })
+    val parse = scala.concurrent.Future(
+      SpecParser.parse("""{"sub": {"type": "string"}}""", Map.empty[String, String], builders))(
+      scala.concurrent.ExecutionContext.global)
+    val spec = scala.concurrent.Await.result(parse, scala.concurrent.duration.Duration(60, "s"))
+    builderThread shouldBe "graft-spec-parse"
+    nativePass(spec, Seq("\"x\"", "1")) shouldBe Seq(true, false)
+  }
+
   /** `n` shallow external documents, each `$ref`-ing the next from inside a
     * property: nesting Jackson cannot see, assembled across documents. */
   private def deepRefChain(n: Int): Map[String, String] =

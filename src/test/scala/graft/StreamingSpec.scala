@@ -33,6 +33,23 @@ class StreamingSpec extends SparkTestBase {
     got shouldBe Map("user" -> true, "robot" -> false, "assistant" -> false)
   }
 
+  test("per-key dispatch on a stream: each micro-batch validated, nothing pinned") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Int, String, String)]
+    val df = input.toDF().toDF("id", "tool", "args")
+    val out = Graft.validateJsonColumnBy(df, "args", "tool",
+      Map("lo" -> SpecParser.parse("""{"properties":{"k":{"maximum":10}}}""")))
+    val q = out.writeStream.format("memory").queryName("sv_dispatch").outputMode("append").start()
+    input.addData((1, "lo", """{"k": 5}"""), (2, "lo", """{"k": 50}"""))
+    q.processAllAvailable()
+    input.addData((3, "other", """{"k": 50}"""), (4, "lo", "{"))
+    q.processAllAvailable()
+    val got = spark.table("sv_dispatch").select("id", "pass").collect()
+      .map(r => (r.getInt(0), r.getBoolean(1))).toMap
+    q.stop()
+    got shouldBe Map(1 -> true, 2 -> false, 3 -> true, 4 -> false)
+  }
+
   test("stream with its own pass/violations columns: both replaced in place, no duplicates") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, String, String, Int)]
