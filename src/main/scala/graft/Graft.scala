@@ -60,10 +60,6 @@ object Graft {
     filtered.select((keyCols.map(col) :+ col("json_pointer") :+ col("description")): _*)
   }
 
-  /** Fail-fast boolean per row (the `applyStrict` mode) — cheapest scan. */
-  def passColumn(df: DataFrame, schemaJson: String): Column =
-    Compiler.compileRow(parseSchema(schemaJson), df.schema).pass
-
   /** Legacy v1.0 context rendering of a violation `json_pointer` column
     * (`validation_results.hpp:167-186`): `array("<root>", "[\"prop\"]",
     * "[0]", …)`. Numeric segments render as array indexes — see

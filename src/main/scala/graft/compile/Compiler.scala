@@ -153,37 +153,9 @@ object Compiler {
   /** Does the spec (anywhere in its graph) carry a CustomC? Those keep the
     * legacy typed compilation in weak mode: a user's Column predicate is
     * written against the TYPED value shape, and the variant delegation
-    * would hand it a VariantType column instead. Cycle-safe via an
-    * identity set (RefSchema knots). */
-  private def containsCustom(spec: SchemaSpec): Boolean = {
-    val seen = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[SchemaSpec, java.lang.Boolean]())
-    def walkS(s: SchemaSpec): Boolean =
-      if (!seen.add(s)) false
-      else s match {
-        case r: RefSchema => walkS(r.target)
-        case ConstraintSchema(cs, _, _) => cs.exists(walkC)
-        case _ => false
-      }
-    def walkC(c: Constraint): Boolean = c match {
-      case _: CustomC                 => true
-      case TypeC(_, ss)               => ss.exists(walkS)
-      case PropertiesC(ps, pps, add)  =>
-        ps.exists(p => walkS(p._2)) || pps.exists(p => walkS(p._2)) || add.exists(walkS)
-      case PropertyNamesC(s)          => walkS(s)
-      case DependenciesC(_, sd)       => sd.exists(d => walkS(d._2))
-      case ItemsC(s)                  => walkS(s)
-      case TupleItemsC(is, add)       => is.exists(walkS) || add.exists(walkS)
-      case ContainsC(s)               => walkS(s)
-      case AllOfC(ss)                 => ss.exists(walkS)
-      case AnyOfC(ss)                 => ss.exists(walkS)
-      case OneOfC(ss)                 => ss.exists(walkS)
-      case NotC(s)                    => walkS(s)
-      case CondC(i, t, e)             => walkS(i) || t.exists(walkS) || e.exists(walkS)
-      case _                          => false
-    }
-    walkS(spec)
-  }
+    * would hand it a VariantType column instead. */
+  private def containsCustom(spec: SchemaSpec): Boolean =
+    SchemaSpec.reachableConstraints(spec).exists(_.isInstanceOf[CustomC])
 
   private def compileTyped(spec: SchemaSpec, value: Column, dt: DataType, ptr: Column,
                            opts: CompileOptions): Compiled = spec match {

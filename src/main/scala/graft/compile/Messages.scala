@@ -59,7 +59,6 @@ object Messages {
   def uniqueViolation(i: Long, j: Long) =
     s"Elements at indexes #$i and #$j violate uniqueness constraint."             // VV:1389
   val containsFail = "Failed to any values against subschema in 'contains' constraint." // VV:295 (sic)
-  val notEqual = "Target value and comparison value are not equal"                // VV:1436
 
   // §2.4 combinators
   def allOfChildFail(index: Long) = s"Failed to validate against child schema #$index." // VV:1983

@@ -1314,39 +1314,14 @@ object VariantValidator {
     } finally p.close()
   }
 
-  def assertSupported(s: SchemaSpec): Unit = {
-    // identity-visited set: the spec graph may be cyclic (RefSchema knots)
-    val seen = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[SchemaSpec, java.lang.Boolean]())
-    def walk(s: SchemaSpec): Unit = {
-      if (!seen.add(s)) return
-      s match {
-        case r: RefSchema => walk(r.target)
-        case ConstraintSchema(cs, _, _) => cs.foreach {
-          case cc: CustomC if cc.nativePredicate.isEmpty =>
-            throw new UnsupportedOperationException(
-              s"CustomC(${cc.name}) is Column-only (no nativePredicate); " +
-                "supply a Variant => Boolean to run it on the native walker")
-          case PropertiesC(p, pp, a) =>
-            p.foreach(x => walk(x._2)); pp.foreach(x => walk(x._2)); a.foreach(walk)
-          case PropertyNamesC(x)    => walk(x)
-          case DependenciesC(_, sd) => sd.foreach(x => walk(x._2))
-          case ItemsC(x)            => walk(x)
-          case TupleItemsC(is, a)   => is.foreach(walk); a.foreach(walk)
-          case ContainsC(x)         => walk(x)
-          case AllOfC(xs)           => xs.foreach(walk)
-          case AnyOfC(xs)           => xs.foreach(walk)
-          case OneOfC(xs)           => xs.foreach(walk)
-          case NotC(x)              => walk(x)
-          case CondC(i, t, e)       => walk(i); t.foreach(walk); e.foreach(walk)
-          case TypeC(_, xs)         => xs.foreach(walk)
-          case _                    =>
-        }
-        case _ =>
-      }
+  def assertSupported(s: SchemaSpec): Unit =
+    SchemaSpec.reachableConstraints(s).foreach {
+      case cc: CustomC if cc.nativePredicate.isEmpty =>
+        throw new UnsupportedOperationException(
+          s"CustomC(${cc.name}) is Column-only (no nativePredicate); " +
+            "supply a Variant => Boolean to run it on the native walker")
+      case _ =>
     }
-    walk(s)
-  }
 }
 
 /** Strict deep equality of two runtime variant values — Boolean,

@@ -101,27 +101,18 @@ object Runner {
                 opts: CompileOptions = CompileOptions()): DataFrame =
     slim(validated(df, spec, keyCols, Some(partCol), opts), keyCols, partCol)
 
-  /** Violation rows from a written/cached [[rowOutput]] frame.
-    *
-    * @param includeLegacyContext also emit the v1.0 `legacy_context` array
-    *        (`<root>`, `["prop"]`, `[0]`, … — validation_results.hpp:167-186)
-    *        alongside `json_pointer`, derived in the same projection. Off by
-    *        default: it duplicates the pointer's information at ~2x the
-    *        bytes per row in the sink. */
+  /** Violation rows from a written/cached [[rowOutput]] frame. The v1.0
+    * `legacy_context` rendering is a column a caller adds with
+    * [[graft.Graft.legacyContext]] over `json_pointer`. */
   def violationsOf(rowOut: DataFrame, keyCols: Seq[String],
-                   partCol: String = "part_id",
-                   includeLegacyContext: Boolean = false): DataFrame = {
-    val base = rowOut.where(!col("pass"))
+                   partCol: String = "part_id"): DataFrame =
+    rowOut.where(!col("pass"))
       .select(keyCols.map(col) :+ col(partCol) :+
         posexplode(col("violations")).as(Seq("constraint_seq", "__graft_viol")): _*)
       .select(keyCols.map(col) :+ col(partCol) :+ col("constraint_seq") :+
         col("__graft_viol.json_pointer").as("json_pointer") :+
         col("__graft_viol.description").as("description") :+
         col("__graft_viol.kind").as("kind"): _*)
-    if (includeLegacyContext)
-      base.withColumn("legacy_context", graft.Graft.legacyContext(col("json_pointer")))
-    else base
-  }
 
   /** Per-partition verdicts (incl. violation counts) from a [[rowOutput]]
     * frame — one hash aggregate, O(partitions) result rows. */

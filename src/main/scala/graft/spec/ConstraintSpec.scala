@@ -21,6 +21,43 @@ sealed trait SchemaSpec {
   def constraints: Seq[Constraint] = Nil
 }
 
+object SchemaSpec {
+
+  /** The subschemas a constraint carries, in keyword order. */
+  private def subschemas(c: Constraint): Seq[SchemaSpec] = c match {
+    case TypeC(_, ss)              => ss
+    case PropertiesC(ps, pps, add) => ps.map(_._2) ++ pps.map(_._2) ++ add
+    case PropertyNamesC(s)         => Seq(s)
+    case DependenciesC(_, sd)      => sd.map(_._2)
+    case ItemsC(s)                 => Seq(s)
+    case TupleItemsC(is, add)      => is ++ add
+    case ContainsC(s)              => Seq(s)
+    case AllOfC(ss)                => ss
+    case AnyOfC(ss)                => ss
+    case OneOfC(ss)                => ss
+    case NotC(s)                   => Seq(s)
+    case CondC(i, t, e)            => i +: (t.toSeq ++ e)
+    case _                         => Nil
+  }
+
+  /** Every constraint reachable from `root`, depth first, each constraint
+    * before its subschemas. Each schema node is visited once (an identity
+    * set), so cyclic graphs knotted through [[RefSchema]] terminate. Lazy:
+    * `exists` / `find` stop at the first hit. */
+  def reachableConstraints(root: SchemaSpec): Iterator[Constraint] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SchemaSpec, java.lang.Boolean]())
+    def walk(s: SchemaSpec): Iterator[Constraint] =
+      if (!seen.add(s)) Iterator.empty
+      else s match {
+        case r: RefSchema => walk(r.target)
+        case _ => s.constraints.iterator.flatMap(c =>
+          Iterator.single(c) ++ subschemas(c).iterator.flatMap(walk))
+      }
+    walk(root)
+  }
+}
+
 /** Boolean schema `true` / empty schema — always valid. */
 case object TrueSchema extends SchemaSpec
 

@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 import graft.Graft
 import graft.checks.TableChecks
 import graft.data.TranscriptGen
+import graft.io.Scratch
 
 /** Clean scaling measurement: fresh JVM, one parallelism level, N timed
   * repetitions of the full validation pass over a stored table.
@@ -36,6 +37,17 @@ object ScalingProbe {
   def num(v: Double, decimals: Int): String =
     String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
 
+  /** Spark's shuffle/spill dir for bench sessions: on the fast root, since
+    * disk writeback storms (30-60s stalls on a virtio disk) otherwise land
+    * inside timed runs. */
+  val localDir: String = s"${Scratch.fast}/graft-spark"
+
+  /** Where a probe writes its row-pass output: keyed by the input path as
+    * well as the core count, so two probes over different inputs at the
+    * same core count never overwrite each other's output mid-read. */
+  def rowOutPath(cores: Int, path: String): String =
+    s"$localDir/rowout-${cores}_${Scratch.sanitized(path)}"
+
   /** THE bench Spark session config — one definition for Bench's part-1
     * query sweep and every pinned probe level, so a knob (split sizing,
     * tmpfs spill dir) can never apply to one and not the other. */
@@ -48,9 +60,7 @@ object ScalingProbe {
       // size scan splits so the input stage has >= 2 waves at full cores
       .config("spark.sql.files.maxPartitionBytes", sys.env.getOrElse("GRAFT_MAX_PART", "16m"))
       .config("spark.sql.files.openCostInBytes", "1m")
-      // shuffle/spill on tmpfs: /dev/vda writeback storms otherwise inject
-      // 30-60s stalls into timed runs on this VM
-      .config("spark.local.dir", "/dev/shm/graft-spark")
+      .config("spark.local.dir", localDir)
       .config("spark.ui.enabled", "false").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -69,7 +79,7 @@ object ScalingProbe {
 
     val keys = Seq("conv_id", "turn_idx")
     val spec = Graft.parseSchema(TranscriptGen.transcriptSchemaJson)
-    val rowOutPath = s"/dev/shm/graft-spark/rowout-$cores"
+    val rowOutDir = rowOutPath(cores, path)
 
     def pass(): (Long, Map[String, Double]) = {
       val stepT = new ConcurrentHashMap[String, Double]()
@@ -86,9 +96,9 @@ object ScalingProbe {
       val rowDerived = Future {
         step("rowpass") {
           graft.run.Runner.rowOutput(turns, spec, keys)
-            .write.mode("overwrite").parquet(rowOutPath)
+            .write.mode("overwrite").parquet(rowOutDir)
         }
-        val rowOut = spark.read.parquet(rowOutPath)
+        val rowOut = spark.read.parquet(rowOutDir)
         val fVerdicts = Future(step("verdicts") {
           graft.run.Runner.verdictsOf(rowOut).agg(sum("rows")).head().getLong(0)
         })

@@ -75,7 +75,8 @@ class DriverQuerySpec extends SparkTestBase {
         SpecParser.parse(
           """{"properties":{"o_orderpriority":{"enum":["1-URGENT","2-HIGH","3-MEDIUM"]}}}"""),
         Seq("o_orderkey")),
-      Seq("o_orderkey"), includeLegacyContext = true)
+      Seq("o_orderkey"))
+      .withColumn("legacy_context", Graft.legacyContext(col("json_pointer")))
       .where(col("kind") === "enum")
       .select(col("o_orderkey"), col("json_pointer"),
         concat_ws("|", col("legacy_context")).as("legacy_ctx"), col("description"))

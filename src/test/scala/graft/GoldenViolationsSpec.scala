@@ -103,7 +103,7 @@ class GoldenViolationsSpec extends SparkTestBase {
 
   test("violation SINK emits legacy_context alongside json_pointer (opt-in), golden vs cpp:59-108") {
     // The AllOf fixture through the runner's sink path: rowOutput-shaped
-    // frame → violationsOf(includeLegacyContext = true); every row must
+    // frame → violationsOf + Graft.legacyContext; every row must
     // carry BOTH renderings, byte-matching the reference's golden pairs in
     // FIFO order (constraint_seq).
     val schema =
@@ -114,7 +114,8 @@ class GoldenViolationsSpec extends SparkTestBase {
     val rowOut = Graft.validateJsonColumn(
         Seq(("k1", "[1.5, 2.5, 3.5]")).toDF("k", "doc"), "doc", SpecParser.parse(schema))
       .withColumn("part_id", lit(0L))
-    val sink = graft.run.Runner.violationsOf(rowOut, Seq("k"), includeLegacyContext = true)
+    val sink = graft.run.Runner.violationsOf(rowOut, Seq("k"))
+      .withColumn("legacy_context", Graft.legacyContext(col("json_pointer")))
     val got = sink.orderBy("constraint_seq").collect().map(r =>
       (r.getAs[String]("json_pointer"), r.getAs[String]("description"),
        r.getSeq[String](r.fieldIndex("legacy_context")).toVector))
