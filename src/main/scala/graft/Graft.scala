@@ -77,12 +77,6 @@ object Graft {
     concat(array(lit("<root>")), segs)
   }
 
-  final case class JsonValidation(flagged: DataFrame)
-
-  /** Validate a column of arbitrary JSON documents — the fully-dynamic
-    * valijson mode: each document is parsed to a Spark variant and the
-    * compiled spec dispatches on the per-row runtime type. Adds `pass`
-    * (malformed JSON fails) and `violations`. Shuffle-free projection. */
   /** Default dynamic-JSON path: ONE parse + ONE document walk per row via
     * the native [[graft.functions.ValidateJsonExpr]] (the reference's
     * ValidationVisitor shape, vectorized by the scan). NULL documents pass

@@ -217,39 +217,27 @@ object SparkEntry {
     // same reason newBenchSession puts spark.local.dir on the fast root)
     s"$fastAux/sdedup_${sanitized(dir)}"
 
-  private def copyTree(src: String, dst: String): Unit = {
-    val sp = java.nio.file.Paths.get(src)
-    val dp = java.nio.file.Paths.get(dst)
+  /** Mirrors the tree at `src` into `dst`. With `link`, data files are
+    * hard-linked (same-filesystem, O(1) per file) instead of copied — safe
+    * ONLY for trees whose files are never modified in place after creation.
+    * Parquet part files and streaming-sink output qualify (appends create
+    * NEW uniquely-named files; the only re-created name is the 0-byte
+    * _SUCCESS marker, which is always copied so no inode is shared with a
+    * writer). A filesystem that refuses the link gets a copy. */
+  private def mirrorTree(src: String, dst: String, link: Boolean): Unit = {
+    import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+    val sp = Paths.get(src)
+    val dp = Paths.get(dst)
+    def copy(p: Path, target: Path): Unit =
+      Files.copy(p, target, StandardCopyOption.REPLACE_EXISTING)
     walked(sp)(_.foreach { p =>
       val target = dp.resolve(sp.relativize(p))
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.createDirectories(target)
-      else java.nio.file.Files.copy(p, target,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    })
-  }
-
-  /** Like [[copyTree]] but hard-links data files (same-filesystem, O(1) per
-    * file) instead of copying bytes. Safe ONLY for trees whose files are
-    * never modified in place after creation — parquet part files and
-    * streaming-sink output qualify (appends create NEW uniquely-named
-    * files; the only re-created name is the 0-byte _SUCCESS marker, which
-    * is skipped and re-created fresh so no inode is shared with a writer). */
-  private def linkTree(src: String, dst: String): Unit = {
-    val sp = java.nio.file.Paths.get(src)
-    val dp = java.nio.file.Paths.get(dst)
-    walked(sp)(_.foreach { p =>
-      val target = dp.resolve(sp.relativize(p))
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.createDirectories(target)
-      else if (p.getFileName.toString == "_SUCCESS")
-        java.nio.file.Files.copy(p, target,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      if (Files.isDirectory(p)) Files.createDirectories(target)
+      else if (!link || p.getFileName.toString == "_SUCCESS") copy(p, target)
       else
-        try java.nio.file.Files.createLink(target, p)
+        try Files.createLink(target, p)
         catch { case _: UnsupportedOperationException | _: java.io.IOException =>
-          java.nio.file.Files.copy(p, target,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING) }
+          copy(p, target) }
     })
   }
 
@@ -590,7 +578,7 @@ object SparkEntry {
 
     "q_json_validate" -> ((s, dir) => { implicit val sp = s
       // fully-dynamic path: events.props validated as arbitrary JSON
-      // documents through the VariantType compiler
+      // documents through the native single-walk validator
       // resplit: one-row-group input, the walk is the cost (see resplit doc)
       val out = Graft.validateJsonColumn(resplit(t(dir, "events")), "props",
         """{"type":"object","required":["k"],
@@ -1710,17 +1698,17 @@ object SparkEntry {
       // scan, then the frame-side KS expressions on the sketch bytes —
       // nothing is collected to the driver
       val skRow = base.agg(
-        KllSketch.kllBuild(when(col("is_a"), col("v"))).as("sk_a"),
-        KllSketch.kllBuild(when(!col("is_a"), col("v"))).as("sk_b"),
-        KllSketch.kllBuild(when(!col("is_a"), col("v") + 25.0)).as("sk_c"))
+        kll_sketch_agg_double(when(col("is_a"), col("v")), KllSketch.DefaultK).as("sk_a"),
+        kll_sketch_agg_double(when(!col("is_a"), col("v")), KllSketch.DefaultK).as("sk_b"),
+        kll_sketch_agg_double(when(!col("is_a"), col("v") + 25.0), KllSketch.DefaultK).as("sk_c"))
       val pairs = skRow.select(explode(array(
           struct(lit("even_vs_odd").as("pair"), col("sk_a").as("a"),
             col("sk_b").as("b")),
           struct(lit("even_vs_shifted").as("pair"), col("sk_a").as("a"),
             col("sk_c").as("b")))).as("p"))
         .select(col("p.pair").as("pair"),
-          KllSketch.kllN(col("p.a")).as("kn_a"),
-          KllSketch.kllN(col("p.b")).as("kn_b"),
+          kll_sketch_get_n_double(col("p.a")).as("kn_a"),
+          kll_sketch_get_n_double(col("p.b")).as("kn_b"),
           KllSketch.kllKsDelta(col("p.a"), col("p.b")).as("sk_delta"),
           KllSketch.kllKsDrifted(col("p.a"), col("p.b"), 0.05).as("drifted"))
       exact.join(pairs, "pair").select(
@@ -1932,9 +1920,9 @@ object SparkEntry {
       // uniquely-named files). Seeding `pairs` from pairs0 also means the
       // result below reads ONE sink directory — the exact frame a
       // downstream consumer of the sink would read.
-      linkTree(s"$base/layout0", s"$base/layout")
-      linkTree(s"$base/pairs0", s"$base/pairs")
-      copyTree(s"$base/ckpt0", s"$base/ckpt")
+      mirrorTree(s"$base/layout0", s"$base/layout", link = true)
+      mirrorTree(s"$base/pairs0", s"$base/pairs", link = true)
+      mirrorTree(s"$base/ckpt0", s"$base/ckpt", link = false)
       drainStreamingDedup(base, "")
       // the full stream's pair set: seed-batch within-batch pairs (linked in
       // from pairs0) plus the replayed probing batch's appends

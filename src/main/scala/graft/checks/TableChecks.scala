@@ -87,7 +87,8 @@ object TableChecks {
     * (sketch size ≤ ~10 KiB per column per partition).
     *
     * NUMERIC columns additionally get a mergeable KLL quantile sketch
-    * (`{c}_kll` binary, [[graft.functions.KllSketch]]) — the north rule's
+    * (`{c}_kll` binary from Spark's `kll_sketch_agg_double` at `kllK`, the
+    * column cast to double; see [[graft.functions.KllSketch]]) — the north rule's
     * "quantiles via t-digest" as a persisted, append-only partial:
     * [[mergeSketchStats]] re-derives table-level p50/p95/p99 from the
     * sketch table alone, so quantiles too survive incremental ingestion
@@ -109,7 +110,8 @@ object TableChecks {
           max(col(c)).as(s"${c}_max"))
         dt match {
           case _: org.apache.spark.sql.types.NumericType =>
-            base :+ graft.functions.KllSketch.kllBuild(col(c), kllK).as(s"${c}_kll")
+            // Spark's KLL build takes DOUBLE only: cast integral/decimal columns
+            base :+ kll_sketch_agg_double(col(c).cast("double"), kllK).as(s"${c}_kll")
           case _ => base
         }
       }
@@ -131,9 +133,11 @@ object TableChecks {
     * the approximation it is, never as a hashable exact value.
     *
     * Columns that carried a `{c}_kll` quantile sketch additionally yield
-    * `{c}_q50/_q95/_q99` estimates (KLL union + rank query; same
+    * `{c}_q50/_q95/_q99` estimates (`kll_merge_agg_double` union +
+    * `kll_sketch_get_quantile_double` rank query; same
     * approximate-within-rank-bounds contract — ±1.65% normalized rank at
-    * k=200, preserved by merging). */
+    * k=200, preserved by merging). A column with no non-NULL value yields
+    * NULL quantiles. */
   def mergeSketchStats(sketches: DataFrame, dataCols: Seq[String]): DataFrame = {
     val have = sketches.columns.toSet
     val kllCols = dataCols.filter(c => have(s"${c}_kll"))
@@ -150,15 +154,20 @@ object TableChecks {
         max(q(s"${c}_max")).as(s"${c}_max"))
     }) ++ kllCols.map(c =>
       // union ONCE per column; rank queries run on the merged binary below.
-      // The merged sketch inherits the persisted sketches' k (the gadget
-      // adopts the first input — KllSketch.MergeAgg), so a table built at
-      // a wider k keeps its accuracy without the caller re-supplying it
-      graft.functions.KllSketch.kllMerge(q(s"${c}_kll")).as(s"_${c}_kllm"))
+      // The merged sketch inherits the persisted sketches' k, so a table
+      // built at a wider k keeps its accuracy without the caller
+      // re-supplying it
+      kll_merge_agg_double(q(s"${c}_kll")).as(s"_${c}_kllm"))
     val agged = sketches.agg(aggs.head, aggs.tail: _*)
-    val quantiles = kllCols.flatMap(c => Seq(
-      graft.functions.KllSketch.kllQuantile(q(s"_${c}_kllm"), 0.50).as(s"${c}_q50"),
-      graft.functions.KllSketch.kllQuantile(q(s"_${c}_kllm"), 0.95).as(s"${c}_q95"),
-      graft.functions.KllSketch.kllQuantile(q(s"_${c}_kllm"), 0.99).as(s"${c}_q99")))
+    val quantiles = kllCols.flatMap { c =>
+      val m = q(s"_${c}_kllm")
+      // the rank query throws on an empty sketch (an all-NULL column); no
+      // values means no quantile, so the guard yields NULL instead
+      def quantile(rank: Double): Column =
+        when(kll_sketch_get_n_double(m) > 0, kll_sketch_get_quantile_double(m, lit(rank)))
+      Seq(quantile(0.50).as(s"${c}_q50"), quantile(0.95).as(s"${c}_q95"),
+        quantile(0.99).as(s"${c}_q99"))
+    }
     // drop exactly the merge temporaries — a prefix test would also drop
     // the stats of any user column that itself starts with an underscore
     val tmp = kllCols.map(c => s"_${c}_kllm").toSet

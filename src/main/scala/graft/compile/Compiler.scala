@@ -23,7 +23,7 @@ final case class Compiled(pass: Column, violations: Column)
 /** Compile options mirroring `valijson::Validator` modes
   * (`validator.hpp:22-26`: kStrongTypes/kWeakTypes;
   * `validation_visitor.hpp` m_strictDateTime). Strong typing is the natural
-  * mode for typed Spark columns; weak mode is reserved (round-2). */
+  * mode for typed Spark columns; `strictTypes = false` is weak mode. */
 final case class CompileOptions(strictTypes: Boolean = true,
                                 strictDateTime: Boolean = false,
                                 regexEngine: graft.functions.RegexEngine =

@@ -3,13 +3,10 @@ package graft.functions
 import org.apache.datasketches.kll.KllDoublesSketch
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.quantilescommon.KolmogorovSmirnov
-import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionDescription}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
 import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
 
 /** Mergeable quantile sketches — the north rule's "min/max/quantiles via
@@ -18,13 +15,20 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
   * sketches `TableChecks.sketchStats` persists; same mergeability and
   * error-bound story as a t-digest, with a provable rank-error guarantee).
   *
+  * Build, merge, rank query and count are Spark's own `kll_*_double`
+  * functions (`kll_sketch_agg_double`, `kll_merge_agg_double`,
+  * `kll_sketch_get_quantile_double`, `kll_sketch_get_n_double`), which
+  * read and write the DataSketches `KllDoublesSketch` byte format. This
+  * object adds what Spark lacks: the two-sample Kolmogorov-Smirnov drift
+  * test over two such sketches, and a corruption guard.
+  *
   * Why not `percentile_approx`: its buffers merge associatively WITHIN one
   * query, but Spark exposes no way to persist them — so a stats table
   * built incrementally (append one sketch row per new partition, never
   * rescan the corpus; the 100 TB contract of `sketchStats`) cannot carry
-  * quantiles with the built-in. KLL closes exactly that gap: the binary
-  * column round-trips through parquet, and `kll_merge` + `kll_quantile`
-  * re-derive table-level quantiles from O(partitions) sketch rows.
+  * quantiles with it. KLL closes exactly that gap: the binary column
+  * round-trips through parquet, and a merge + rank query re-derive
+  * table-level quantiles from O(partitions) sketch rows.
   *
   * Error contract: a KLL sketch with k=200 answers any rank query within
   * ±1.65% normalized rank error at 99% confidence; merging preserves the
@@ -34,11 +38,6 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
   * samples) — treat it as the approximation it is, never as a hashable
   * exact value.
   *
-  * Scale shape: the typed `Aggregator`s run as object-buffer aggregates
-  * (Spark keeps the live sketch per group and serializes only at the
-  * partial→final exchange), so building sketches for P partitions costs
-  * one corpus scan plus a shuffle of P × ~few-KiB binaries.
-  *
   * Reference analog: the closest machinery is valijson's mergeable frozen
   * constants; per-column quantile state is a capability the north rule
   * adds beyond the single-document reference (SURVEY.md §2.5).
@@ -47,116 +46,6 @@ object KllSketch {
 
   /** Default sketch parameter: ±1.65% rank error @99% conf, ~3 KiB/sketch. */
   val DefaultK: Int = 200
-
-  /** Serializable wrapper: DataSketches objects are not Java-serializable;
-    * the sketch's own compact byte format is the wire form. Serialization
-    * happens only at aggregation exchanges, never per row. */
-  final class Holder(@transient var sk: KllDoublesSketch) extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      if (sk == null) { out.writeInt(-1); return } // MergeAgg's lazy zero
-      val b = sk.toByteArray
-      out.writeInt(b.length)
-      out.write(b)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      val len = in.readInt()
-      if (len < 0) { sk = null; return }
-      val b = new Array[Byte](len)
-      in.readFully(b)
-      sk = KllDoublesSketch.heapify(Memory.wrap(b))
-    }
-  }
-
-  /** Build a KLL sketch over a double column; NULLs and NaNs are skipped
-    * (NaN has no rank; mirrors how `sketchStats` HLL skips NULLs). */
-  final class BuildAgg(k: Int) extends Aggregator[Option[Double], Holder, Array[Byte]] {
-    override def zero: Holder = new Holder(KllDoublesSketch.newHeapInstance(k))
-    override def reduce(b: Holder, x: Option[Double]): Holder = {
-      x.foreach(v => if (!v.isNaN) b.sk.update(v))
-      b
-    }
-    override def merge(a: Holder, b: Holder): Holder = { a.sk.merge(b.sk); a }
-    override def finish(r: Holder): Array[Byte] = r.sk.toByteArray
-    override def bufferEncoder: Encoder[Holder] = Encoders.javaSerialization[Holder]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  /** Union previously-persisted sketch binaries; NULL/empty cells (a
-    * partition whose column was entirely NULL) contribute nothing.
-    * Malformed binaries fail loudly — a corrupt stats table must not
-    * silently skew quantiles.
-    *
-    * The merge gadget's k is taken from the FIRST merged sketch, not a
-    * caller parameter: a KLL merge result carries the accuracy of the
-    * smallest-k participant, gadget included, so a fixed default gadget
-    * would silently cap sketches built wider than it. The persisted bytes
-    * already know their k — the caller never has to re-supply it. With
-    * HETEROGENEOUS-k inputs (a table built across a k config change),
-    * which k the gadget physically adopts is scheduling-dependent, but the
-    * accuracy bound is not: the result behaves as built at the smallest
-    * participating k either way — the same
-    * order-dependent-within-rank-bounds contract every KLL merge already
-    * carries. */
-  final class MergeAgg extends Aggregator[Option[Array[Byte]], Holder, Array[Byte]] {
-    override def zero: Holder = new Holder(null) // k unknown until the first sketch
-    override def reduce(b: Holder, x: Option[Array[Byte]]): Holder = {
-      x.foreach { bytes =>
-        if (bytes.nonEmpty) {
-          val in = KllDoublesSketch.heapify(Memory.wrap(bytes))
-          if (b.sk == null) b.sk = in else b.sk.merge(in)
-        }
-      }
-      b
-    }
-    override def merge(a: Holder, b: Holder): Holder =
-      if (a.sk == null) b
-      else if (b.sk == null) a
-      else { a.sk.merge(b.sk); a }
-    override def finish(r: Holder): Array[Byte] =
-      (if (r.sk == null) KllDoublesSketch.newHeapInstance(DefaultK) else r.sk).toByteArray
-    override def bufferEncoder: Encoder[Holder] = Encoders.javaSerialization[Holder]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  /** Aggregate column: KLL sketch bytes over `c` (cast to double). */
-  def kllBuild(c: Column, k: Int = DefaultK): Column =
-    udaf(new BuildAgg(k), ExpressionEncoder[Option[Double]]())
-      .apply(c.cast("double"))
-
-  /** Aggregate column: union of persisted KLL sketch binaries. The merged
-    * sketch inherits the inputs' k (see [[MergeAgg]]). */
-  def kllMerge(c: Column): Column =
-    udaf(new MergeAgg, ExpressionEncoder[Option[Array[Byte]]]()).apply(c)
-
-  /** Scalar column: the value at normalized rank `q` (0..1, inclusive
-    * search criterion) from sketch bytes; NULL for NULL/empty sketches. */
-  def kllQuantile(bytes: Column, q: Double): Column =
-    org.apache.spark.sql.GraftSqlBridge.column(
-      KllQuantileExpr(
-        org.apache.spark.sql.GraftSqlBridge.expression(bytes),
-        org.apache.spark.sql.GraftSqlBridge.expression(
-          org.apache.spark.sql.functions.lit(q))))
-
-  /** Scalar column: number of values the sketch has seen. */
-  def kllN(bytes: Column): Column =
-    org.apache.spark.sql.GraftSqlBridge.column(
-      KllNExpr(org.apache.spark.sql.GraftSqlBridge.expression(bytes)))
-
-  /** Interpreted/codegen shared kernel. Boxed so an empty sketch can
-    * return NULL (KLL defines no quantile on an empty sketch). Bad rank
-    * arguments fail loudly (caller bug); malformed BYTES fail loudly too —
-    * sketch tables are engine-written, so corruption is a data-integrity
-    * event, not an expected input. */
-  def quantileBoxed(bytes: Array[Byte], q: Double): java.lang.Double = {
-    if (bytes == null || bytes.isEmpty) return null
-    val sk = KllDoublesSketch.heapify(Memory.wrap(bytes))
-    if (sk.isEmpty) null else java.lang.Double.valueOf(sk.getQuantile(q))
-  }
-
-  def nOf(bytes: Array[Byte]): java.lang.Long = {
-    if (bytes == null || bytes.isEmpty) return null
-    java.lang.Long.valueOf(KllDoublesSketch.heapify(Memory.wrap(bytes)).getN)
-  }
 
   /** Scalar column: two-sample Kolmogorov-Smirnov delta (max CDF gap)
     * between two persisted sketches; NULL if either side is NULL/empty. */
@@ -189,8 +78,9 @@ object KllSketch {
 
   /** Interpreted/codegen kernels for the KS expressions. Boxed so a NULL
     * verdict is expressible for NULL/empty sketches (KS is undefined on an
-    * empty sample); malformed bytes fail loudly, same contract as
-    * [[quantileBoxed]]. */
+    * empty sample). Malformed bytes fail loudly — sketch tables are
+    * engine-written, so corruption is a data-integrity event, not an
+    * expected input. */
   def ksDeltaBoxed(a: Array[Byte], b: Array[Byte]): java.lang.Double = {
     if (a == null || a.isEmpty || b == null || b.isEmpty) return null
     val sa = KllDoublesSketch.heapify(Memory.wrap(a))
@@ -221,76 +111,6 @@ object KllSketch {
       try { KllDoublesSketch.heapify(Memory.wrap(bytes)); true }
       catch { case scala.util.control.NonFatal(_) => false }
     }
-}
-
-/** `kll_quantile(sketch_bytes, rank)` — value at normalized rank from a
-  * persisted KLL doubles sketch. NULL on NULL input or an empty sketch. */
-@ExpressionDescription(
-  usage = "kll_quantile(sketch, rank) - value at normalized rank (0..1) from KLL sketch bytes")
-case class KllQuantileExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, DoubleType) => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"kll_quantile requires (binary, double), got $other")
-    }
-
-  override def nullSafeEval(bytes: Any, q: Any): Any =
-    KllSketch.quantileBoxed(bytes.asInstanceOf[Array[Byte]], q.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, q) => {
-      // freshName: two instances of this expression can share one codegen
-      // scope (nullSafeCodeGen adds no braces for non-nullable children) —
-      // a fixed local name would be a janino redefinition error there
-      val tmp = ctx.freshName("graftKllQ")
-      s"""
-      java.lang.Double $tmp = graft.functions.KllSketch.quantileBoxed($b, $q);
-      if ($tmp == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $tmp.doubleValue(); }
-    """
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): KllQuantileExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `kll_n(sketch_bytes)` — number of values the sketch summarizes. */
-@ExpressionDescription(
-  usage = "kll_n(sketch) - number of values summarized by KLL sketch bytes")
-case class KllNExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case BinaryType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"kll_n requires binary, got $other")
-    }
-
-  override def nullSafeEval(bytes: Any): Any = {
-    val n = KllSketch.nOf(bytes.asInstanceOf[Array[Byte]])
-    if (n == null) null else n.longValue()
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, b => {
-      val tmp = ctx.freshName("graftKllN")
-      s"""
-      java.lang.Long $tmp = graft.functions.KllSketch.nOf($b);
-      if ($tmp == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $tmp.longValue(); }
-    """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): KllNExpr =
-    copy(child = newChild)
 }
 
 /** `kll_ks_delta(a, b)` — two-sample Kolmogorov-Smirnov statistic (max

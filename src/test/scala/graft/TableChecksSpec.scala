@@ -400,10 +400,13 @@ class TableChecksSpec extends SparkTestBase {
     val withPart = turns.withColumn("sk_part",
       pmod(hash(col("conv_id"), col("turn_idx"), col("role")), lit(2)))
     val sk = withPart.agg(
-      KllSketch.kllBuild(when(col("sk_part") === 0, col("turn_idx"))).as("a"),
-      KllSketch.kllBuild(when(col("sk_part") === 1, col("turn_idx"))).as("b"),
-      KllSketch.kllBuild(when(col("sk_part") === 1, col("turn_idx") + 1000)).as("c"),
-      KllSketch.kllBuild(lit(null).cast("double")).as("e")).head()
+      kll_sketch_agg_double(when(col("sk_part") === 0, col("turn_idx")).cast("double"),
+        KllSketch.DefaultK).as("a"),
+      kll_sketch_agg_double(when(col("sk_part") === 1, col("turn_idx")).cast("double"),
+        KllSketch.DefaultK).as("b"),
+      kll_sketch_agg_double(when(col("sk_part") === 1, col("turn_idx") + 1000).cast("double"),
+        KllSketch.DefaultK).as("c"),
+      kll_sketch_agg_double(lit(null).cast("double"), KllSketch.DefaultK).as("e")).head()
     val (a, b, c, e) = (sk.getAs[Array[Byte]]("a"), sk.getAs[Array[Byte]]("b"),
       sk.getAs[Array[Byte]]("c"), sk.getAs[Array[Byte]]("e"))
 
@@ -461,7 +464,8 @@ class TableChecksSpec extends SparkTestBase {
 
   test("KLL expressions codegen-compile with repeated instances in one projection (no interpreted fallback)") {
     import graft.functions.KllSketch
-    val sk = turns.agg(KllSketch.kllBuild(col("turn_idx"))).head().getAs[Array[Byte]](0)
+    val sk = turns.agg(kll_sketch_agg_double(col("turn_idx").cast("double"), KllSketch.DefaultK))
+      .head().getAs[Array[Byte]](0)
     // CODEGEN_ONLY turns a janino compile error (e.g. a fixed-name local
     // declared twice when two instances share one non-nullable-child
     // codegen scope) into a hard failure instead of silent fallback
@@ -470,10 +474,10 @@ class TableChecksSpec extends SparkTestBase {
     conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
       val r = spark.range(1).select(
-        KllSketch.kllQuantile(lit(sk), 0.5).as("q1"),
-        KllSketch.kllQuantile(lit(sk), 0.9).as("q2"),
-        KllSketch.kllN(lit(sk)).as("n1"),
-        KllSketch.kllN(lit(sk)).as("n2"),
+        kll_sketch_get_quantile_double(lit(sk), lit(0.5)).as("q1"),
+        kll_sketch_get_quantile_double(lit(sk), lit(0.9)).as("q2"),
+        kll_sketch_get_n_double(lit(sk)).as("n1"),
+        kll_sketch_get_n_double(lit(sk)).as("n2"),
         KllSketch.kllKsDelta(lit(sk), lit(sk)).as("d1"),
         KllSketch.kllKsDelta(lit(sk), lit(sk)).as("d2"),
         KllSketch.kllKsThreshold(lit(sk), lit(sk), 0.05).as("t1"),
@@ -488,16 +492,15 @@ class TableChecksSpec extends SparkTestBase {
     import org.apache.datasketches.kll.KllDoublesSketch
     import org.apache.datasketches.memory.Memory
     // a stats table built WIDER than the default k must keep its accuracy
-    // through the merge: the merge gadget adopts the first input's k
-    // instead of capping at a fixed default (a KLL merge result carries
-    // the accuracy of the smallest-k participant, gadget included)
+    // through the merge: the merge keeps the inputs' k instead of capping
+    // at a fixed default (a KLL merge result carries the accuracy of the
+    // smallest-k participant)
     val withPart = turns.withColumn("sk_part", pmod(hash(col("conv_id")), lit(4)))
     val sk = TableChecks.sketchStats(withPart, "sk_part", Seq("turn_idx"), kllK = 800)
-    val merged = sk.agg(KllSketch.kllMerge(col("turn_idx_kll"))).head().getAs[Array[Byte]](0)
+    val merged = sk.agg(kll_merge_agg_double(col("turn_idx_kll"))).head().getAs[Array[Byte]](0)
     KllDoublesSketch.heapify(Memory.wrap(merged)).getK shouldBe 800
-    // lazy gadget: a group whose cells are all NULL/empty still merges to
-    // a well-formed empty sketch
-    val empty = sk.limit(0).agg(KllSketch.kllMerge(col("turn_idx_kll")))
+    // a group with no sketch rows still merges to a well-formed empty sketch
+    val empty = sk.limit(0).agg(kll_merge_agg_double(col("turn_idx_kll")))
       .head().getAs[Array[Byte]](0)
     assert(KllSketch.isValidSketch(empty))
     assert(KllDoublesSketch.heapify(Memory.wrap(empty)).isEmpty)
@@ -511,5 +514,58 @@ class TableChecksSpec extends SparkTestBase {
     assert(!KllSketch.isValidSketch(Array.fill[Byte](64)(0x5A)))
     assert(!KllSketch.isValidSketch(Array.emptyByteArray))
     assert(!KllSketch.isValidSketch(null))
+  }
+
+  test("KLL byte format: DataSketches-written sketches read through Spark's built-ins, and built-in sketches through the KS checks") {
+    import graft.functions.KllSketch
+    import org.apache.datasketches.kll.KllDoublesSketch
+    import org.apache.datasketches.memory.Memory
+    import org.apache.datasketches.quantilescommon.KolmogorovSmirnov
+    def heap(b: Array[Byte]): KllDoublesSketch = KllDoublesSketch.heapify(Memory.wrap(b))
+    import spark.implicits._
+
+    // direction 1: bytes written by KllDoublesSketch.toByteArray (the format
+    // of every persisted {c}_kll column) answer the same quantile and count
+    // through the built-in accessors, and merge through kll_merge_agg_double
+    def direct(from: Int, until: Int): Array[Byte] = {
+      val d = KllDoublesSketch.newHeapInstance(200)
+      (from until until).foreach(v => d.update(v.toDouble))
+      d.toByteArray
+    }
+    val (d1, d2) = (direct(0, 10000), direct(5000, 15000))
+    val r = spark.range(1).select(
+      kll_sketch_get_quantile_double(lit(d1), lit(0.5)).as("q50"),
+      kll_sketch_get_quantile_double(lit(d1), lit(0.95)).as("q95"),
+      kll_sketch_get_n_double(lit(d1)).as("n")).head()
+    r.getAs[Double]("q50") shouldBe heap(d1).getQuantile(0.5)
+    r.getAs[Double]("q95") shouldBe heap(d1).getQuantile(0.95)
+    r.getAs[Long]("n") shouldBe 10000L
+    val merged = Seq(d1, d2).toDF("sk").agg(kll_merge_agg_double(col("sk")))
+      .head().getAs[Array[Byte]](0)
+    heap(merged).getN shouldBe 20000L
+    heap(merged).getK shouldBe 200
+    // the merged median of 0..9999 ∪ 5000..14999 is 7500; ±2.5% rank is
+    // ±500 of the 20000 values, ±250 in value where the density is 2
+    val mq = spark.range(1).select(kll_sketch_get_quantile_double(lit(merged), lit(0.5)))
+      .head().getDouble(0)
+    mq shouldBe 7500.0 +- 250.0
+
+    // direction 2: built-in sketch bytes heapify, and the KS checks read
+    // them exactly as they read the heapified sketch
+    val Seq(b1, b2) = Seq(0L, 3000L).map(shift => spark.range(10000)
+      .agg(kll_sketch_agg_double((col("id") + shift).cast("double"), KllSketch.DefaultK))
+      .head().getAs[Array[Byte]](0))
+    heap(b1).getN shouldBe 10000L
+    heap(b1).getK shouldBe KllSketch.DefaultK
+    val delta = KolmogorovSmirnov.computeKSDelta(heap(b1), heap(b2))
+    val thr = KolmogorovSmirnov.computeKSThreshold(heap(b1), heap(b2), 0.05)
+    val v = Drift.ksCheck(b1, b2)
+    v.value shouldBe delta
+    v.threshold shouldBe thr
+    assert(!v.pass, s"a 30% shift not flagged: $v")
+    spark.range(1).select(KllSketch.kllKsDelta(lit(b1), lit(b2))).head().getDouble(0) shouldBe delta
+    // and the two formats compare against each other: built-in vs direct
+    Drift.ksCheck(b1, d1).value shouldBe
+      KolmogorovSmirnov.computeKSDelta(heap(b1), heap(d1))
   }
 }
